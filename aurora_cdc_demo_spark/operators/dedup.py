@@ -367,12 +367,7 @@ MINHASH_LSH_SQL = f"""
 """
 
 
-def minhash_estimate(
-    docs: DataFrame,
-    sh: DataFrame | None = None,
-    signatures: DataFrame | None = None,
-    sharr: DataFrame | None = None,
-) -> DataFrame:
+def minhash_estimate(signatures: DataFrame, sharr: DataFrame) -> DataFrame:
     """Sketch calibration: for every LSH candidate pair, the
     MinHash-ESTIMATED Jaccard (matching minhashes / NUM_MINHASH)
     side by side with the exact shingle Jaccard — the view that
@@ -384,15 +379,15 @@ def minhash_estimate(
 
     Scale: candidates come from the banded equi-join (never
     all-pairs); the signature re-join is k integer columns per side;
-    the exact verify touches only candidate pairs."""
-    sh = sh if sh is not None else shingles(docs)
-    sig = signatures if signatures is not None else minhash_signatures(sh)
-    cand = lsh_candidates(sig)
-    sa = sig.select(
+    the exact side is a row-local array_intersect on the per-doc
+    DISTINCT shingle-array view ``sharr`` (doc_id, arr, c), so it
+    touches only candidate pairs (r10, guide §3.4)."""
+    cand = lsh_candidates(signatures)
+    sa = signatures.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{k}").alias(f"a{k}") for k in range(NUM_MINHASH)],
     )
-    sb = sig.select(
+    sb = signatures.select(
         F.col("doc_id").alias("doc_b"),
         *[F.col(f"mh{k}").alias(f"b{k}") for k in range(NUM_MINHASH)],
     )
@@ -405,59 +400,26 @@ def minhash_estimate(
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", matches.cast("long").alias("matches"))
     )
-    if sharr is not None:
-        # r10 (guide §3.4): exact side via row-local array_intersect
-        # on the shared per-doc shingle-array view — the postings-
-        # expansion subtree, its count joins and the left join all
-        # drop out; inter = 0 pairs yield uni = ca + cb, exactly the
-        # coalesce below.
-        pa = sharr.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("arr").alias("arr_a"),
-            F.col("c").alias("ca2"),
-        )
-        pb = sharr.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("arr").alias("arr_b"),
-            F.col("c").alias("cb2"),
-        )
-        j = (
-            m.join(pa, "doc_a")
-            .join(pb, "doc_b")
-            .withColumn(
-                "inter0",
-                F.expr(
-                    "CAST(size(array_intersect(arr_a, arr_b)) AS BIGINT)"
-                ),
-            )
-            .withColumn(
-                "uni0",
-                (F.col("ca2") + F.col("cb2") - F.col("inter0")).cast(
-                    "long"
-                ),
-            )
-        )
-        return j.select(
-            "doc_a",
-            "doc_b",
-            "matches",
-            F.expr(f"(10000 * matches) div {NUM_MINHASH}").alias(
-                "est_jaccard_bp"
-            ),
-            F.expr("(10000 * inter0) div uni0").alias("exact_jaccard_bp"),
-        )
-    ex = _pair_jaccard(sh, pairs=cand).select("doc_a", "doc_b", "inter", "uni")
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("c"))
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("c").alias("ca"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("c").alias("cb"))
+    pa = sharr.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("arr").alias("arr_a"),
+        F.col("c").alias("ca2"),
+    )
+    pb = sharr.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("arr").alias("arr_b"),
+        F.col("c").alias("cb2"),
+    )
     j = (
-        m.join(ex, ["doc_a", "doc_b"], "left")
-        .join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .withColumn("inter0", F.coalesce(F.col("inter"), F.lit(0)))
+        m.join(pa, "doc_a")
+        .join(pb, "doc_b")
+        .withColumn(
+            "inter0",
+            F.expr("CAST(size(array_intersect(arr_a, arr_b)) AS BIGINT)"),
+        )
         .withColumn(
             "uni0",
-            F.coalesce(F.col("uni"), F.col("ca") + F.col("cb")).cast("long"),
+            (F.col("ca2") + F.col("cb2") - F.col("inter0")).cast("long"),
         )
     )
     return j.select(
@@ -972,28 +934,7 @@ def decontaminate_lsh_sql(
 LSH_TUNING_ROWS = (1, 2, 3, 4, 6)
 
 
-def lsh_tuning_verified1(
-    sh: DataFrame, signatures: DataFrame
-) -> DataFrame:
-    """The ONE exact-verify pass the tuning sweep needs: candidate
-    pairs at r=1 (the pigeonhole superset of every wider-row
-    config's candidates) with the Jaccard threshold applied.
-    Callers _gate_map this so the per-arm verify becomes a
-    key-join against materialized verdicts (r6 verdict item 4)."""
-    cand1 = lsh_candidates(signatures, band_rows=1)
-    return (
-        _pair_jaccard(sh, pairs=cand1)
-        .where(
-            F.lit(10000) * F.col("inter")
-            >= F.lit(JACCARD_THRESHOLD_BP) * F.col("uni")
-        )
-        .select("doc_a", "doc_b")
-    )
-
-
-def lsh_tuning_pairs(
-    sh: DataFrame, signatures: DataFrame, sharr: DataFrame | None = None,
-) -> DataFrame:
+def lsh_tuning_pairs(sh: DataFrame, signatures: DataFrame) -> DataFrame:
     """The sweep's ONE pair table (r9, guide §2.1/§3.1): cand(r) ⊆
     cand(1) by pigeonhole, and band-collision at any row-width r is
     a pure function of the two signatures — so the whole S-curve
@@ -1003,14 +944,13 @@ def lsh_tuning_pairs(
     (lsh_tuning below) instead of its own posexplode + band-key
     self-join + DISTINCT shuffle (5 arm joins removed at sf0.1).
 
-    With ``sharr`` (the per-doc DISTINCT shingle-array view, r10,
-    guide §3.4) the exact verdict is size(array_intersect) computed
-    row-locally on the same doc-keyed joins that attach the
-    signatures — the postings-expansion verify subtree, its two
-    count joins, the verdict left-join AND cand1's localCheckpoint
-    (cand1 is then referenced once) all drop out of the build.
-    Without it, the r9 postings tail is kept (cand1 feeds both the
-    verify join and the pair table — the multiplicative-CTE rule)."""
+    The exact verdict is the postings-expansion verify: cand1 feeds
+    both the verify join and the pair table, so it is checkpointed
+    (the multiplicative-CTE rule). The row-local array_intersect
+    verify lost here (r10, 9 of 14 interleaved rounds): the r=1
+    superset is permissive, so most pairs share few shingles and the
+    intersect pays O(|x|+|y|) where the postings join touches only
+    shared shingles."""
     mharr = F.array(*[F.col(f"mh{k}") for k in range(NUM_MINHASH)])
     siga = signatures.select(
         F.col("doc_id").alias("doc_a"), mharr.alias("amh")
@@ -1018,41 +958,6 @@ def lsh_tuning_pairs(
     sigb = signatures.select(
         F.col("doc_id").alias("doc_b"), mharr.alias("bmh")
     )
-    if sharr is not None:
-        cand1 = lsh_candidates(signatures, band_rows=1)
-        pa = sharr.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("arr").alias("arr_a"),
-            F.col("c").alias("ca"),
-        )
-        pb = sharr.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("arr").alias("arr_b"),
-            F.col("c").alias("cb"),
-        )
-        return (
-            cand1.join(siga, "doc_a")
-            .join(sigb, "doc_b")
-            .join(pa, "doc_a")
-            .join(pb, "doc_b")
-            .withColumn(
-                "inter",
-                F.expr(
-                    "CAST(size(array_intersect(arr_a, arr_b)) AS BIGINT)"
-                ),
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                "amh",
-                "bmh",
-                (
-                    F.lit(10000) * F.col("inter")
-                    >= F.lit(JACCARD_THRESHOLD_BP)
-                    * (F.col("ca") + F.col("cb") - F.col("inter"))
-                ).alias("verified"),
-            )
-        )
     cand1 = lsh_candidates(signatures, band_rows=1).localCheckpoint()
     ver1 = (
         _pair_jaccard(sh, pairs=cand1)
@@ -1097,46 +1002,13 @@ def _band_collides(r: int) -> Column:
     )
 
 
-def lsh_tuning(
-    docs: DataFrame,
-    sh: DataFrame | None = None,
-    signatures: DataFrame | None = None,
-    verified1: DataFrame | None = None,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """r9 shape: ONE aggregate over the materialized pair table —
-    per arm, n_candidates = Σ[collides_r], n_verified =
-    Σ[collides_r ∧ verified] (verified ⇒ collides at r=1, and
-    cand(r) ⊆ cand(1) makes the restriction exact). The 5-arm
-    banded self-joins of the previous shape are gone; the report
-    rows unfold from the single aggregate row driver-free."""
-    sh = sh if sh is not None else shingles(docs)
-    sig = signatures if signatures is not None else minhash_signatures(sh)
-    p = pairs if pairs is not None else lsh_tuning_pairs(sh, sig)
-    if verified1 is not None:
-        # legacy arm kept for callers holding a verdict-only map:
-        # rebuild the pair table against it
-        mharr = F.array(*[F.col(f"mh{k}") for k in range(NUM_MINHASH)])
-        cand1 = lsh_candidates(sig, band_rows=1)
-        p = (
-            cand1.join(
-                sig.select(F.col("doc_id").alias("doc_a"), mharr.alias("amh")),
-                "doc_a",
-            )
-            .join(
-                sig.select(F.col("doc_id").alias("doc_b"), mharr.alias("bmh")),
-                "doc_b",
-            )
-            .join(
-                verified1.select("doc_a", "doc_b", F.lit(True).alias("v")),
-                ["doc_a", "doc_b"],
-                "left",
-            )
-            .select(
-                "doc_a", "doc_b", "amh", "bmh",
-                F.coalesce(F.col("v"), F.lit(False)).alias("verified"),
-            )
-        )
+def lsh_tuning(pairs: DataFrame) -> DataFrame:
+    """r9 shape: ONE aggregate over the materialized pair table
+    (lsh_tuning_pairs) — per arm, n_candidates = Σ[collides_r],
+    n_verified = Σ[collides_r ∧ verified] (verified ⇒ collides at
+    r=1, and cand(r) ⊆ cand(1) makes the restriction exact). The
+    5-arm banded self-joins of the previous shape are gone; the
+    report rows unfold from the single aggregate row driver-free."""
     aggs = []
     for r in LSH_TUNING_ROWS:
         coll = _band_collides(r)
@@ -1150,7 +1022,7 @@ def lsh_tuning(
                 F.sum((coll & F.col("verified")).cast("long")), F.lit(0)
             ).cast("long").alias(f"v{r}")
         )
-    one = p.agg(*aggs)
+    one = pairs.agg(*aggs)
     arms = F.array(
         *[
             F.struct(

@@ -3115,10 +3115,6 @@ def semdedup_tau_sweep_sql(
     """
 
 
-def semdedup_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run(spark, sf_dir, semdedup_tau_sweep_sql("spark"))
-
-
 def semdedup_tau_sweep_from_mats_sql(
     cells_view: str, bmax_view: str
 ) -> str:

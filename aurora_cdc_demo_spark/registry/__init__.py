@@ -1,11 +1,9 @@
-"""Query registry package: the former monolithic registry.py
-split into contiguous per-family part files (r6 verdict item
-6). Parts execute in the monolith's original order; every
-top-level name is re-exported here so
-`from aurora_cdc_demo_spark.registry import X` keeps working
-for all consumers. The split is mechanical — definitions and
-registration side-effects are unchanged slices; only import
-plumbing was generated (tools/split_registry.py)."""
+"""Query registry package: per-family part files, each importing
+what it uses from the parts before it (tests/test_registry_forward_refs.py
+holds every part to that). Loading the parts registers their queries;
+every top-level name is re-exported here so
+`from aurora_cdc_demo_spark.registry import X` works for all
+consumers, later parts winning on a shared name."""
 
 from . import p01_cdc_operation_log as _p01
 from . import p02_text_gopher_rules as _p02
@@ -16,21 +14,10 @@ from . import p06_dq_contract_checks as _p06
 from . import p07_events_allen_relations as _p07
 from . import p08_graph_rich_club_knn as _p08
 
-_PARTS = [_p01, _p02, _p03, _p04, _p05, _p06, _p07, _p08]
-
-# re-export every top-level name, later parts winning —
-# exactly the monolith module's final namespace
 _g = globals()
-for _m in _PARTS:
+for _m in (_p01, _p02, _p03, _p04, _p05, _p06, _p07, _p08):
     for _k, _v in vars(_m).items():
         if not _k.startswith('__'):
             _g[_k] = _v
 
-# call-time forward references: names a part's functions
-# read from module globals that a LATER part binds (legal
-# in the monolith; late-bound here after all parts load)
-_p01._gate_map = _p02._gate_map
-_p02._BOILERPLATE_BP = _p03._BOILERPLATE_BP
-_p02._clf_score_df = _p04._clf_score_df
-
-del _g, _m, _k, _v, _PARTS
+del _g, _m, _k, _v

@@ -7,6 +7,7 @@ gate). Column names/types are aligned on both sides.
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +41,74 @@ def query(name: str, oracle: str | None = None):
 
 def _with_log(body: str) -> str:
     return f"WITH log AS ({CDC_LOG_SQL})\n{body}"
+
+
+# ---------------------------------------------------------------------------
+# Gate-map cache (r5): per-(Spark app, sf_dir) materializations shared
+# across queries — keep-list gate verdicts, shingle/signature tables,
+# index builds and the few driver-side values (corpus counts, trained
+# BPE tables) that queries would otherwise recompute per call.
+# ---------------------------------------------------------------------------
+
+_GATE_CACHE: dict = {}
+
+# Per-key build locks (r9): gate maps are built from driver THREADS
+# (the fused keep-list fans its ten v4 gates out; embed_keep_list
+# overlaps its three chains) and several gates share upstream maps
+# (shingles, minhash signatures, kmeans cells). Without a lock two
+# threads that miss the cache on the same key both run the chain —
+# duplicated jobs, not wrong answers. One lock per key serializes
+# only same-key builds; distinct gates still overlap.
+_GATE_LOCKS: dict = {}
+_GATE_LOCKS_GUARD = threading.Lock()
+
+# immutable corpora: the read-only testdata trees (TESTDATA.md) and
+# the repo's write-once scaling corpus (tools/make_scale_data.py)
+_IMMUTABLE_CORPUS_ROOTS = (
+    "/root/testdata",
+    os.path.abspath(
+        os.path.join(os.path.dirname(__file__), "..", "..", "scale_data")
+    ),
+)
+
+
+def _gate_lock(key):
+    with _GATE_LOCKS_GUARD:
+        return _GATE_LOCKS.setdefault(key, threading.Lock())
+
+
+def _gate_cacheable(sf_dir) -> bool:
+    """Only immutable corpora are cached; ad-hoc sf_dirs (unit-test
+    tmpdirs with synthetic corpora) recompute on every call so a
+    rewritten tmpdir can never serve stale results."""
+    return str(sf_dir).startswith(_IMMUTABLE_CORPUS_ROOTS)
+
+
+def _gate_value(spark, sf_dir, name, compute):
+    """compute() ONCE per (Spark app, sf_dir, name) for cacheable
+    corpora, under the key's build lock; on every call elsewhere."""
+    if not _gate_cacheable(sf_dir):
+        return compute()
+    key = (spark.sparkContext.applicationId, str(sf_dir), name)
+    if key in _GATE_CACHE:
+        return _GATE_CACHE[key]
+    with _gate_lock(key):
+        if key not in _GATE_CACHE:
+            _GATE_CACHE[key] = compute()
+        return _GATE_CACHE[key]
+
+
+def _gate_map(spark, sf_dir, name, builder):
+    """Materialize (localCheckpoint) a per-doc verdict map ONCE per
+    (Spark app, sf_dir) and reuse it across keep-list versions and
+    graph variants — the production shape, where gate verdicts are
+    materialized tables a curation run maintains, not expressions
+    re-derived inside every artifact's plan. On a cluster the same
+    maps would be df.checkpoint(eager=True) against a replicated dir
+    (the local-vs-reliable split operators/graph.py documents)."""
+    return _gate_value(
+        spark, sf_dir, name, lambda: builder().localCheckpoint()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -444,12 +513,9 @@ def q_dedup_minhash_estimate(spark, sf_dir):
     vs exact Jaccard (both floor bp, bit-exact cross-engine) — tells
     a dedup deployment whether k=12 sketches suffice at its
     threshold; see operators/dedup.py:minhash_estimate."""
-    docs, sh, sig = _text_minhash_mats(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_MINHASH_VERIFY", "arrays") == "postings":
-        return _dedup.minhash_estimate(docs, sh=sh, signatures=sig)
+    _, sh, sig = _text_minhash_mats(spark, sf_dir)
     return _dedup.minhash_estimate(
-        docs, sh=sh, signatures=sig,
-        sharr=_shingle_arrays_map(spark, sf_dir, sh),
+        sig, _shingle_arrays_map(spark, sf_dir, sh)
     )
 
 
@@ -472,10 +538,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     docs, sh, sig = _text_minhash_mats(spark, sf_dir)
     # r10 (guide §3.4): exact verify via row-local array_intersect
     # over the shared shingle-array gate instead of the postings-
-    # expansion join (A/B'd interleaved; toggle kept so paired runs
-    # can alternate tails in one session).
-    if os.environ.get("SPARK_GRAFT_MINHASH_VERIFY", "arrays") == "postings":
-        return _dedup.minhash_lsh_pairs(docs, sh=sh, signatures=sig)
+    # expansion join (won an interleaved A/B).
     cand = _dedup.lsh_candidates(sig)
     return _dedup.lsh_verified_pairs_arrays(
         cand, _shingle_arrays_map(spark, sf_dir, sh)
@@ -582,13 +645,7 @@ def q_semdedup_cells(spark, sf_dir):
     _gate_map (r5) — the embed keep-list and the tau-sweep both
     consume this verdict. r10: built from the shared cell/bmax
     materializations (argmin assign as a map-side-partial min-struct
-    aggregate, verdict = maxcos >= tau — see _sem_mats); toggle kept
-    for interleaved A/B against the single-statement form."""
-    if os.environ.get("SPARK_GRAFT_SEMDEDUP", "staged") == "single":
-        return _gate_map(
-            spark, sf_dir, "embed_semdedup",
-            lambda: _sim.semdedup(spark, sf_dir),
-        )
+    aggregate, verdict = maxcos >= tau — see _sem_mats)."""
 
     def build():
         _sem_mats(spark, sf_dir)

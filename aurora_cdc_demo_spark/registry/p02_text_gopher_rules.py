@@ -1,7 +1,6 @@
 from __future__ import annotations
 
-import os
-
+from ..operators.classifier import clf_score_df
 from .p01_cdc_operation_log import (  # noqa: F401
     F,
     ORACLES,
@@ -18,6 +17,8 @@ from .p01_cdc_operation_log import (  # noqa: F401
     _ann_exact_mat,
     _debezium,
     _dedup,
+    _gate_map,
+    _gate_value,
     _keep_list_v2,
     _keep_list_v3,
     _km_index,
@@ -886,54 +887,7 @@ def q_corpus_keep_list_v4(spark, sf_dir):
 # tests/test_round5.py / test_round11.py / test_round12.py.
 
 
-_GATE_CACHE: dict = {}
-
-# Per-key build locks (r9): gate maps are built from driver THREADS
-# (the fused keep-list fans its ten v4 gates out; embed_keep_list
-# overlaps its three chains) and several gates share upstream maps
-# (shingles, minhash signatures, kmeans cells). Without a lock two
-# threads that miss the cache on the same key both run the chain —
-# duplicated jobs, not wrong answers. One lock per key serializes
-# only same-key builds; distinct gates still overlap.
-import threading as _threading
-
-_GATE_LOCKS: dict = {}
-_GATE_LOCKS_GUARD = _threading.Lock()
-
-
-def _gate_lock(key):
-    with _GATE_LOCKS_GUARD:
-        return _GATE_LOCKS.setdefault(key, _threading.Lock())
-
-
-def _gate_map(spark, sf_dir, name, builder):
-    """Materialize (localCheckpoint) a per-doc verdict map ONCE per
-    (Spark app, sf_dir) and reuse it across keep-list versions and
-    graph variants — the production shape, where gate verdicts are
-    materialized tables a curation run maintains, not expressions
-    re-derived inside every artifact's plan. On a cluster the same
-    maps would be df.checkpoint(eager=True) against a replicated dir
-    (the local-vs-reliable split operators/graph.py documents).
-    Cached only for the immutable /root/testdata trees; ad-hoc
-    sf_dirs (unit-test tmpdirs with synthetic corpora) rebuild on
-    every call so a rewritten tmpdir can never serve stale
-    verdicts."""
-    # immutable corpora: the driver's testdata trees and the
-    # write-once scaling corpus (tools/make_scale_data.py)
-    cacheable = str(sf_dir).startswith(
-        ("/root/testdata", "/root/repo/scale_data")
-    )
-    key = (spark.sparkContext.applicationId, str(sf_dir), name)
-    if cacheable and key in _GATE_CACHE:
-        return _GATE_CACHE[key]
-    if not cacheable:
-        return builder().localCheckpoint()
-    with _gate_lock(key):
-        if key in _GATE_CACHE:
-            return _GATE_CACHE[key]
-        df = builder().localCheckpoint()
-        _GATE_CACHE[key] = df
-    return df
+_BOILERPLATE_BP = 5000  # drop docs losing > half their mass to line dedup
 
 
 def _fused_keep_list(spark, sf_dir, graph, level):
@@ -952,37 +906,8 @@ def _fused_keep_list(spark, sf_dir, graph, level):
     cores to spare for ~10 small jobs, and on a cluster the same
     pattern fills the executors instead of running 10 half-idle
     stages back to back); the v5/v7 gates are sequential by data
-    dependency (they score only earlier-gate survivors). The v6
-    line-dedup gate is NOT data-dependent — a line is duplicate
-    relative to the whole corpus, not to gate survivors — so for
-    level >= 6 its build is PREFETCHED on a driver thread while the
-    v4 pool and the v5 repetition pass run (r10, guide §2.6: the
-    only remaining sequential gate whose input is the raw corpus);
-    dec_base6's _gate_map call then joins the already-running build
-    under the per-key lock."""
+    dependency (they score only earlier-gate survivors)."""
     docs = load_table(spark, sf_dir, "documents")
-
-    _ld_builder = lambda: QUERIES["corpus_line_dedup_report"](  # noqa: E731
-        spark, sf_dir
-    ).select(
-        "doc_id",
-        (F.col("removed_char_bp") > _BOILERPLATE_BP).alias("boilerplate"),
-    )
-    # prefetch only for cacheable (immutable) corpora — elsewhere
-    # _gate_map rebuilds per call, so a prefetch would be double work
-    # (SPARK_GRAFT_KL_PREFETCH=0 disables, for interleaved A/B)
-    if (
-        level >= 6
-        and os.environ.get("SPARK_GRAFT_KL_PREFETCH", "1") == "1"
-        and str(sf_dir).startswith(
-            ("/root/testdata", "/root/repo/scale_data")
-        )
-    ):
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        _ld_pool = _TPE(max_workers=1)
-        _ld_pool.submit(_gate_map, spark, sf_dir, "kl_ld", _ld_builder)
-        _ld_pool.shutdown(wait=False)
 
     def dec_base4():
         specs = {
@@ -1151,7 +1076,15 @@ def _fused_keep_list(spark, sf_dir, graph, level):
     # a line is duplicate only relative to the WHOLE corpus, so this
     # gate cannot be survivor-restricted) ---------------------------
     def dec_base6():
-        ld = _gate_map(spark, sf_dir, "kl_ld", _ld_builder)
+        ld = _gate_map(
+            spark, sf_dir, "kl_ld",
+            lambda: QUERIES["corpus_line_dedup_report"](spark, sf_dir).select(
+                "doc_id",
+                (F.col("removed_char_bp") > _BOILERPLATE_BP).alias(
+                    "boilerplate"
+                ),
+            ),
+        )
         j6 = base.join(ld, "doc_id")
         return j6.select(
             "doc_id",
@@ -1180,7 +1113,7 @@ def _fused_keep_list(spark, sf_dir, graph, level):
         surv7 = base.filter(
             F.col("decision").isin("sampled_out", "keep")
         ).select("doc_id")
-        return _clf_score_df(docs.join(surv7, "doc_id")).select(
+        return clf_score_df(docs.join(surv7, "doc_id")).select(
             "doc_id", (F.col("keep_flag") == 1).alias("model_keep")
         )
 
@@ -3366,7 +3299,7 @@ def q_dedup_lsh_tuning(spark, sf_dir):
     exp 1.43 uncapped at sf1→sf10, ~0 capped). Both dialects derive
     the keep-rate from the same corpus count."""
     docs, sh, sig = _text_minhash_mats(spark, sf_dir)
-    n = docs.count()
+    n = _gate_value(spark, sf_dir, "n_documents", docs.count)
     k = max(1, n // _dedup.TUNE_SAMPLE_CAP)
     if k > 1:
         sig = sig.where(
@@ -3375,30 +3308,14 @@ def q_dedup_lsh_tuning(spark, sf_dir):
                 f" 1, 8), 16, 10) AS BIGINT), {k}) = 0"
             )
         )
-    # r10 NEGATIVE result (guide §1, measured): the array_intersect
-    # verify that wins for dedup_minhash_lsh's high-precision 3-band
-    # candidates LOSES here — the r=1 pigeonhole superset is
-    # permissive (any-one-of-12 collision), so most candidate pairs
-    # have low overlap and the row-local intersect pays O(|x|+|y|)
-    # per pair where the postings join touches only shared shingles.
-    # 14 interleaved cold rounds at sf0.1: postings min 3.75/4.15,
-    # arrays min 4.39/5.08; postings wins 9/14. Default stays
-    # postings; the arrays branch is kept for paired re-measurement.
-    mode = os.environ.get("SPARK_GRAFT_TUNING_VERIFY", "postings")
-    if mode == "arrays":
-        from .p01_cdc_operation_log import _shingle_arrays_map
-
-        sharr = _shingle_arrays_map(spark, sf_dir, sh)
-        p = _gate_map(
-            spark, sf_dir, f"lsh_tuning_pairs_arr_k{k}",
-            lambda: _dedup.lsh_tuning_pairs(sh, sig, sharr=sharr),
-        )
-    else:
-        p = _gate_map(
-            spark, sf_dir, f"lsh_tuning_pairs_k{k}",
-            lambda: _dedup.lsh_tuning_pairs(sh, sig),
-        )
-    return _dedup.lsh_tuning(docs, sh=sh, signatures=sig, pairs=p)
+    # r10 (guide §1, measured): the postings verify beat the
+    # array_intersect verify here in 9 of 14 interleaved cold rounds
+    # at sf0.1 — see operators/dedup.py:lsh_tuning_pairs.
+    p = _gate_map(
+        spark, sf_dir, f"lsh_tuning_pairs_k{k}",
+        lambda: _dedup.lsh_tuning_pairs(sh, sig),
+    )
+    return _dedup.lsh_tuning(p)
 
 
 @query(

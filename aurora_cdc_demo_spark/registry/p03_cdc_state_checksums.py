@@ -10,6 +10,7 @@ from .p01_cdc_operation_log import (  # noqa: F401
     _PACK_SHARD,
     _V3_EXTRA_CTES,
     _dedup,
+    _sem_mats,
     _sim,
     _sk,
     _text,
@@ -23,6 +24,7 @@ from .p01_cdc_operation_log import (  # noqa: F401
 )
 from .p02_text_gopher_rules import (  # noqa: F401
     ORACLES,
+    _BOILERPLATE_BP,
     _graph_edges_map,
     _SNAP_CHUNKS,
     _V4_EXTRA_CTES,
@@ -242,12 +244,6 @@ def q_semdedup_tau_sweep(spark, sf_dir):
     semdedup_cells (dropped-at-tau ⟺ maxcos >= tau) — the sweep's
     own copy of the cells→pairc→bmax chain is gone; the oracle
     keeps the single-statement form."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SEMDEDUP", "staged") == "single":
-        return _sim.semdedup_tau_sweep(spark, sf_dir)
-    from .p01_cdc_operation_log import _sem_mats
-
     _sem_mats(spark, sf_dir)
     return spark.sql(
         _sim.semdedup_tau_sweep_from_mats_sql(
@@ -3536,8 +3532,6 @@ def q_events_burstiness(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # R8: twelve-gate keep-list — line-dedup boilerplate gate
 # ---------------------------------------------------------------------------
-
-_BOILERPLATE_BP = 5000  # drop docs losing > half their mass to line dedup
 
 _V6_EXTRA_CTES = f"""
         , ld AS (

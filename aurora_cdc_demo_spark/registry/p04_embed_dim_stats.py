@@ -23,6 +23,7 @@ from .p01_cdc_operation_log import (  # noqa: F401
 from .p02_text_gopher_rules import (  # noqa: F401
     _graph_edges_map,
     ORACLES,
+    _BOILERPLATE_BP,
     _DSIR_MIN_MEAN_PPM,
     _V4_EXTRA_CTES,
     _knn_edges_view,
@@ -30,7 +31,6 @@ from .p02_text_gopher_rules import (  # noqa: F401
     _sampling,
 )
 from .p03_cdc_state_checksums import (  # noqa: F401
-    _BOILERPLATE_BP,
     _HLL_ALPHA_E5,
     _HLL_M,
     _HLL_SHIFT,

@@ -8,6 +8,7 @@ from .p01_cdc_operation_log import (  # noqa: F401
     _KEEP_GATES_CTES_LSH,
     _V3_EXTRA_CTES,
     _debezium,
+    _gate_map,
     _pq_index,
     _sim,
     _text,
@@ -22,7 +23,6 @@ from .p02_text_gopher_rules import (  # noqa: F401
     _DEBEZIUM_SILVER_CTE,
     _V4_EXTRA_CTES,
     _fused_keep_list,
-    _gate_map,
     _knn_edges_view,
     _rfm_customer_agg,
     _rfm_ranked,

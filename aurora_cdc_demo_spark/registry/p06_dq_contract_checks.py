@@ -4,6 +4,7 @@ from .p01_cdc_operation_log import (  # noqa: F401
     F,
     QUERIES,
     _BINLOG_LOG_CTE,
+    _gate_map,
     _sim,
     _with_log,
     cdc_operation_log,
@@ -15,7 +16,6 @@ from .p01_cdc_operation_log import (  # noqa: F401
 from .p02_text_gopher_rules import (  # noqa: F401
     _graph_edges_map,
     ORACLES,
-    _gate_map,
 )
 from .p03_cdc_state_checksums import (  # noqa: F401
     _gini_weighted_rank,

@@ -6,6 +6,8 @@ from .p01_cdc_operation_log import (  # noqa: F401
     _PACK_CTX,
     _PACK_SHARD,
     _debezium,
+    _gate_map,
+    _gate_value,
     _km_index,
     _mm,
     _sim,
@@ -20,8 +22,6 @@ from .p02_text_gopher_rules import (  # noqa: F401
     _graph_edges_map,
     ORACLES,
     _DEBEZIUM_SILVER_CTE,
-    _GATE_CACHE,
-    _gate_map,
     _sampling,
 )
 from .p05_corpus_keep_list_v7 import (  # noqa: F401
@@ -118,24 +118,13 @@ from ..operators import bpe as _bpe  # noqa: E402
 
 def _bpe_trained(spark, sf_dir, k=_bpe.BPE_DEEP_ROUNDS):
     """Session cache of the trained (report, symbols) pair — the
-    same immutable-testdata guard as _gate_map (training is a pure
+    same immutable-corpus rule as _gate_map (training is a pure
     function of the corpus; the fertility twin reuses the symbol
     table instead of re-training)."""
-    cacheable = str(sf_dir).startswith(
-        ("/root/testdata", "/root/repo/scale_data")
+    return _gate_value(
+        spark, sf_dir, f"bpe_train_{k}",
+        lambda: _bpe.train(spark, load_table(spark, sf_dir, "documents"), k),
     )
-    key = (
-        spark.sparkContext.applicationId,
-        str(sf_dir),
-        f"bpe_train_{k}",
-    )
-    if cacheable and key in _GATE_CACHE:
-        return _GATE_CACHE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    pair = _bpe.train(spark, docs, k)
-    if cacheable:
-        _GATE_CACHE[key] = pair
-    return pair
 
 
 @query(

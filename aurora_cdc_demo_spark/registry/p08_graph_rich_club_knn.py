@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 from .p01_cdc_operation_log import (  # noqa: F401
     DataFrame,
     F,
@@ -10,6 +8,9 @@ from .p01_cdc_operation_log import (  # noqa: F401
     _DECON_NGRAM,
     _debezium,
     _dedup,
+    _gate_map,
+    _gate_value,
+    _shingle_arrays_map,
     _sim,
     _sk,
     _with_log,
@@ -23,7 +24,6 @@ from .p02_text_gopher_rules import (  # noqa: F401
     _graph_edges_map,
     ORACLES,
     _DEBEZIUM_SILVER_CTE,
-    _gate_map,
     _knn_edges_view,
     _sampling,
 )
@@ -2468,24 +2468,16 @@ def q_dedup_ppjoin_exact(spark, sf_dir):
     # the r9 driver's +55% was real, not noise): below a few hundred
     # candidates the per-pair array materialization constant
     # outweighs the removed posting expansion. Pick by corpus size
-    # (driver-side pruned count-star, the auto_r_bits idiom;
-    # crossover measured between 500 and 5000 docs, threshold 2000);
-    # env override kept for interleaved A/B.
-    mode = os.environ.get("SPARK_GRAFT_PPJOIN_VERIFY", "auto")
-    if mode == "auto":
-        mode = "arrays" if docs.count() >= 2000 else "postings"
-    if mode == "postings":
+    # (driver-side pruned count-star, the auto_r_bits idiom, memoized
+    # in the gate cache; crossover measured between 500 and 5000
+    # docs, threshold 2000).
+    n_docs = _gate_value(spark, sf_dir, "n_documents", docs.count)
+    if n_docs < 2000:
         return spark.sql(
             "WITH _noop AS (SELECT 1)"
             + _ppjoin_body("spark", _dedup.JACCARD_THRESHOLD_BP)
         )
-    _gate_map(
-        spark, sf_dir, "text_shingle_arrays",
-        lambda: sh.groupBy("doc_id").agg(
-            F.collect_list("s").alias("arr"),
-            F.count(F.lit(1)).cast("long").alias("c"),
-        ),
-    ).createOrReplaceTempView("sharr")
+    _shingle_arrays_map(spark, sf_dir, sh).createOrReplaceTempView("sharr")
     return spark.sql(
         "WITH _noop AS (SELECT 1)"
         + _ppjoin_body_spark_arrays(_dedup.JACCARD_THRESHOLD_BP)

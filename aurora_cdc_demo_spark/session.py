@@ -55,3 +55,28 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     # the oracle's naive reading.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     return spark
+
+
+def duck_memory_limit_gb() -> int:
+    """DuckDB memory cap for the oracle side, derived from
+    MemAvailable at CONNECT time.
+
+    A static 24GB cap still failed a full oracle run with
+    'Failed to allocate block of 16384 bytes (bad allocation)' — an
+    OS-level bad_alloc, not DuckDB's own limit firing: with the
+    Spark JVM co-resident the host can have LESS free memory than
+    the static cap, so DuckDB asks the OS for memory that is not
+    there before its own eviction/spill machinery ever engages. Cap
+    at half of what the OS reports available right now (floor 2GB so
+    tiny-SF oracles still run, ceiling 24GB to keep the heavy
+    inlined oracles spilling deterministically), so the buffer
+    manager spills to temp_directory instead of malloc-failing."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    avail_gb = int(line.split()[1]) // (1024 * 1024)
+                    return max(2, min(24, avail_gb // 2))
+    except OSError:
+        pass
+    return 8

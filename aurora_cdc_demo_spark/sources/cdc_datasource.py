@@ -332,10 +332,6 @@ def _group_files(files: list[str], cpus: int) -> list[list[str]]:
 class CDCReplayBatchReader(DataSourceReader):
     def __init__(self, options: dict):
         self.path = options["path"]
-        # captured at PLAN time on the driver (the reader object is
-        # pickled to the workers), so a paired measurement can flip
-        # the boundary format between reads in one session
-        self.use_arrow = os.environ.get("SPARK_GRAFT_ARROW_DS", "1") != "0"
         # the driver contract's core count; cpu_count is the fallback
         # for sessions launched without it
         self.cpus = int(
@@ -360,16 +356,13 @@ class CDCReplayBatchReader(DataSourceReader):
         and both derive every field from the same raw record the same
         way). A file outside the canonical writer format (unexpected
         fields / types) falls back to the per-line tuple path, so the
-        reader stays general. SPARK_GRAFT_ARROW_DS=0 keeps the
-        row-tuple path selectable for paired measurements (same
-        escape-hatch pattern as SPARK_GRAFT_FANOUT)."""
+        reader stays general."""
         for file_path in partition.files:
-            if getattr(self, "use_arrow", True):
-                batch = _parse_file_arrow(file_path)
-                if batch is not None:
-                    if batch.num_rows:
-                        yield batch
-                    continue
+            batch = _parse_file_arrow(file_path)
+            if batch is not None:
+                if batch.num_rows:
+                    yield batch
+                continue
             with open(file_path) as fh:
                 for line in fh:
                     if line.strip():

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import quality_bp_col
+from .pipelines import StagedStateStore
 
 KEEP_QUALITY_BP = 5000
 
@@ -41,7 +42,7 @@ def _digest() -> F.Column:
     )
 
 
-class CurationStore:
+class CurationStore(StagedStateStore):
     """foreachBatch sink maintaining the ADMITTED documents table:
     per batch — in-batch exact dedup (min doc_id per digest), anti-
     join against already-admitted digests, quality floor, atomic
@@ -54,46 +55,13 @@ class CurationStore:
         quality_bp: int = KEEP_QUALITY_BP,
         model_gate: bool = False,
     ):
-        self.spark = spark
-        self.state_dir = state_dir
+        super().__init__(spark, state_dir)
         self.quality_bp = quality_bp
         # model_gate=True adds the hashed-linear-classifier veto
         # (operators/classifier — the SAME scoring definition the
         # batch v7 keep-list runs, so stream-equals-batch stays a
         # law about state handling, not two scorers drifting)
         self.model_gate = model_gate
-
-    # -- state plumbing (same contract as ParquetStateStore) --------
-
-    def _read_state(self) -> DataFrame | None:
-        from pathlib import Path
-
-        state, old = Path(self.state_dir), Path(self.state_dir + ".old")
-        if not state.exists() and old.exists():
-            old.rename(state)
-        if not state.exists():
-            return None
-        return self.spark.read.parquet(self.state_dir)
-
-    def _is_replay(self, batch_id: int) -> bool:
-        from pathlib import Path
-
-        marker = Path(self.state_dir + ".last_batch")
-        return marker.exists() and marker.read_text() == str(batch_id)
-
-    def _commit(self, admitted: DataFrame, batch_id: int) -> None:
-        import shutil
-        from pathlib import Path
-
-        staging = self.state_dir + ".staging"
-        admitted.write.mode("overwrite").parquet(staging)
-        old = self.state_dir + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if Path(self.state_dir).exists():
-            Path(self.state_dir).rename(old)
-        Path(staging).rename(self.state_dir)
-        shutil.rmtree(old, ignore_errors=True)
-        Path(self.state_dir + ".last_batch").write_text(str(batch_id))
 
     # -- the curation step ------------------------------------------
 
@@ -138,14 +106,6 @@ class CurationStore:
         # materialization per batch removed)
         self._commit(merged, batch_id)
 
-    def start(self, stream: DataFrame, checkpoint_dir: str):
-        return (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-
 
 # ---------------------------------------------------------------------------
 # Streaming LINE-level dedup — the ingest twin of the batch CCNet
@@ -180,7 +140,7 @@ def _lines(docs: DataFrame) -> DataFrame:
     )
 
 
-class LineDedupStore:
+class LineDedupStore(StagedStateStore):
     """foreachBatch sink maintaining the corpus-wide line keep-list
     as documents ARRIVE: per batch — in-batch first occurrence per
     line hash (doc_id, line_no order), anti-probe against already-
@@ -188,14 +148,6 @@ class LineDedupStore:
     replay idempotence. End state == the batch corpus_line_dedup
     keep-list whenever arrival order follows doc_id (pinned in
     pytest)."""
-
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.spark = spark
-        self.state_dir = state_dir
-
-    _read_state = CurationStore._read_state
-    _is_replay = CurationStore._is_replay
-    _commit = CurationStore._commit
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._is_replay(batch_id):
@@ -228,11 +180,3 @@ class LineDedupStore:
         # staging-dir write → no lineage hazard, no checkpoint needed
         # (see CurationStore.apply_batch)
         self._commit(merged, batch_id)
-
-    def start(self, stream: DataFrame, checkpoint_dir: str):
-        return (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )

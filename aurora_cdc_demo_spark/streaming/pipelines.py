@@ -16,6 +16,9 @@ ONE declarative merge over all keys per micro-batch.
 
 from __future__ import annotations
 
+import shutil
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,7 +67,60 @@ def windowed_event_counts(stream: DataFrame) -> DataFrame:
     )
 
 
-class ParquetStateStore:
+class StagedStateStore:
+    """Exactly-once state plumbing shared by the foreachBatch stores:
+    the state is one parquet dir, each batch commits by stage-and-swap
+    (write a staging dir, swap it in with two renames), and a
+    `.last_batch` marker written after the swap lets a re-delivered
+    batch id be skipped."""
+
+    def __init__(self, spark: SparkSession, state_dir: str):
+        self.spark = spark
+        self.state_dir = state_dir
+
+    def _read_state(self) -> DataFrame | None:
+        # Crash recovery: the swap in _commit has a window between
+        # rename(state_dir → .old) and rename(.staging → state_dir). If
+        # we crashed there, state_dir is missing but .old holds the full
+        # previous state — roll it back before reading, instead of
+        # silently treating the replayed batch as the first batch.
+        state, old = Path(self.state_dir), Path(self.state_dir + ".old")
+        if not state.exists() and old.exists():
+            old.rename(state)
+        if not state.exists():
+            return None  # genuinely the first batch
+        return self.spark.read.parquet(self.state_dir)
+
+    def _is_replay(self, batch_id: int) -> bool:
+        marker = Path(self.state_dir + ".last_batch")
+        return marker.exists() and marker.read_text() == str(batch_id)
+
+    def _commit(self, merged: DataFrame, batch_id: int) -> None:
+        """Stage-and-swap transactional commit: the new state lands in
+        a side dir and is swapped in, so a crash mid-write leaves the
+        previous state intact (the no-Delta analog of a transactional
+        commit); _read_state rolls back the .old dir if we crash
+        between the two renames."""
+        staging = self.state_dir + ".staging"
+        merged.write.mode("overwrite").parquet(staging)
+        old = self.state_dir + ".old"
+        shutil.rmtree(old, ignore_errors=True)
+        if Path(self.state_dir).exists():
+            Path(self.state_dir).rename(old)
+        Path(staging).rename(self.state_dir)
+        shutil.rmtree(old, ignore_errors=True)
+        Path(self.state_dir + ".last_batch").write_text(str(batch_id))
+
+    def start(self, stream: DataFrame, checkpoint_dir: str):
+        return (
+            stream.writeStream.foreachBatch(self.apply_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+
+class ParquetStateStore(StagedStateStore):
     """foreachBatch sink maintaining a latest-state parquet table via
     the upsert_merge operator (MERGE INTO analog without Delta;
     reference: unity_catalog_cdc_demo.py:392-446).
@@ -80,49 +136,8 @@ class ParquetStateStore:
         state_dir: str,
         key: str | list[str] = "key_id",
     ):
-        self.spark = spark
-        self.state_dir = state_dir
+        super().__init__(spark, state_dir)
         self.key = key
-
-    def _read_state(self) -> DataFrame | None:
-        from pathlib import Path
-
-        # Crash recovery: the swap in apply_batch has a window between
-        # rename(state_dir → .old) and rename(.staging → state_dir). If
-        # we crashed there, state_dir is missing but .old holds the full
-        # previous state — roll it back before reading, instead of
-        # silently treating the replayed batch as the first batch.
-        state, old = Path(self.state_dir), Path(self.state_dir + ".old")
-        if not state.exists() and old.exists():
-            old.rename(state)
-        if not state.exists():
-            return None  # genuinely the first batch
-        return self.spark.read.parquet(self.state_dir)
-
-    def _is_replay(self, batch_id: int) -> bool:
-        from pathlib import Path
-
-        marker = Path(self.state_dir + ".last_batch")
-        return marker.exists() and marker.read_text() == str(batch_id)
-
-    def _commit(self, merged: DataFrame, batch_id: int) -> None:
-        """Stage-and-swap transactional commit: the new state lands in
-        a side dir and is swapped in, so a crash mid-write leaves the
-        previous state intact (the no-Delta analog of a transactional
-        commit); _read_state rolls back the .old dir if we crash
-        between the two renames."""
-        import shutil
-        from pathlib import Path
-
-        staging = self.state_dir + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        old = self.state_dir + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if Path(self.state_dir).exists():
-            Path(self.state_dir).rename(old)
-        Path(staging).rename(self.state_dir)
-        shutil.rmtree(old, ignore_errors=True)
-        Path(self.state_dir + ".last_batch").write_text(str(batch_id))
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Idempotent, atomic batch apply. foreachBatch MAY re-deliver
@@ -139,14 +154,6 @@ class ParquetStateStore:
         else:
             merged = upsert_merge(state, net, key=self.key)
         self._commit(merged, batch_id)
-
-    def start(self, stream: DataFrame, checkpoint_dir: str):
-        return (
-            stream.writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
 
 
 class EvolvingCDCStateStore(ParquetStateStore):
@@ -328,7 +335,7 @@ def error_context_stream_join(
     )
 
 
-class StreamingLSHDedupGate:
+class StreamingLSHDedupGate(StagedStateStore):
     """Incremental near-dup gate for a document INGEST stream — the
     streaming complement of the batch MinHash-LSH dedup
     (operators/dedup.py): documents are admitted as they ARRIVE,
@@ -363,40 +370,8 @@ class StreamingLSHDedupGate:
         state_dir: str,
         min_matches: int = 6,
     ):
-        self.spark = spark
-        self.state_dir = state_dir
+        super().__init__(spark, state_dir)
         self.min_matches = min_matches
-
-    # -- state plumbing (same stage-and-swap as ParquetStateStore) --
-    def _read_state(self) -> DataFrame | None:
-        from pathlib import Path
-
-        state, old = Path(self.state_dir), Path(self.state_dir + ".old")
-        if not state.exists() and old.exists():
-            old.rename(state)
-        if not state.exists():
-            return None
-        return self.spark.read.parquet(self.state_dir)
-
-    def _is_replay(self, batch_id: int) -> bool:
-        from pathlib import Path
-
-        marker = Path(self.state_dir + ".last_batch")
-        return marker.exists() and marker.read_text() == str(batch_id)
-
-    def _commit(self, merged: DataFrame, batch_id: int) -> None:
-        import shutil
-        from pathlib import Path
-
-        staging = self.state_dir + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        old = self.state_dir + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if Path(self.state_dir).exists():
-            Path(self.state_dir).rename(old)
-        Path(staging).rename(self.state_dir)
-        shutil.rmtree(old, ignore_errors=True)
-        Path(self.state_dir + ".last_batch").write_text(str(batch_id))
 
     # -- the gate --
     def _signatures(self, docs: DataFrame) -> DataFrame:

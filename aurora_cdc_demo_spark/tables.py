@@ -58,16 +58,7 @@ def fanout_scan(spark: SparkSession, df: DataFrame,
     fan-out at sf0.1, while the Gopher-repetition token battery wins
     ~3x). A provable no-op at scale — any real corpus yields >=
     defaultParallelism splits and the guard skips the exchange — so
-    the dial is scale-adaptive rather than tuned to local[32].
-
-    SPARK_GRAFT_FANOUT=0 disables the fan-out (measurement escape
-    hatch: lets an A/B harness toggle the exchange on the SAME
-    registered query within one session — guide §1's paired-run
-    discipline on a host whose speed drifts run to run)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FANOUT") == "0":
-        return df
+    the dial is scale-adaptive rather than tuned to local[32]."""
     ck = (spark.sparkContext.applicationId,) + (
         key if key is not None else (df._jdf.queryExecution().logical().semanticHash(),)
     )

@@ -6,37 +6,14 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 
+from aurora_cdc_demo_spark.session import duck_memory_limit_gb
 from aurora_cdc_demo_spark.tables import TABLES
-
-
-def _host_aware_duck_limit_gb() -> int:
-    """DuckDB memory cap derived from MemAvailable at CONNECT time.
-
-    r9's static 24GB cap still OOM'd in the driver's full run
-    ('Failed to allocate block of 16384 bytes (bad allocation)' — an
-    OS-level bad_alloc, not DuckDB's own limit firing): with the
-    Spark JVM co-resident the host can have LESS free memory than
-    the static cap, so DuckDB asks the OS for memory that is not
-    there before its own eviction/spill machinery ever engages. Cap
-    at half of what the OS reports available right now (floor 2GB so
-    tiny-SF oracles still run, ceiling 24GB to keep the heavy
-    inlined oracles spilling deterministically), so the buffer
-    manager spills to temp_directory instead of malloc-failing."""
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    avail_gb = int(line.split()[1]) // (1024 * 1024)
-                    return max(2, min(24, avail_gb // 2))
-    except OSError:
-        pass
-    return 8
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     con.execute("SET temp_directory='/tmp/duck_spill'")
-    con.execute(f"SET memory_limit='{_host_aware_duck_limit_gb()}GB'")
+    con.execute(f"SET memory_limit='{duck_memory_limit_gb()}GB'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con

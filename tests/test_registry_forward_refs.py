@@ -1,122 +1,90 @@
-"""Forward-reference drift law for the split registry package
-(ADVICE r7): the monolith's call-time cross-part references are
-late-bound by a hand-maintained patch list at the end of
-registry/__init__.py. A future edit that adds a NEW cross-part
-reference (in either direction) without the matching import header
-or patch line would only surface as a runtime NameError inside
-whichever query first touches it. This law re-runs the splitter's
-forward-reference scan over the CURRENT part files at test time and
-fails at the patch list instead.
+"""Self-containment law for the registry part files: every global
+name a part reads is bound in that part (a def, an assignment or an
+import in its own header) or is a builtin. A part that read a name
+bound only by a later part would import cleanly and then raise
+NameError inside whichever query first touched it; with this law
+there is no late binding to maintain, and registry/__init__.py only
+loads the parts and re-exports their names.
 
-Rule checked, per part file: every Load-context name that is not a
-builtin and not bound in the part's own namespace (its defs,
-assignments, and generated import header — the same final-state
-binding walk tools/split_registry.py uses) but IS bound by another
-part must be late-bound in __init__'s patch list for that part.
-Names bound by no part at all are function locals/params and are
-ignored, exactly as the splitter ignored them."""
+The check is the compiler's own scope analysis (stdlib `symtable`),
+so function-local imports and parameters count as bound where they
+are bound, and nothing outside the file is consulted.
+
+Run directly to check another copy of the registry:
+`python tests/test_registry_forward_refs.py <registry dir>`."""
 
 from __future__ import annotations
 
 import ast
 import builtins
+import symtable
 import sys
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
-PKG = REPO / "aurora_cdc_demo_spark" / "registry"
+PKG = Path(__file__).resolve().parent.parent / "aurora_cdc_demo_spark" / "registry"
 
-sys.path.insert(0, str(REPO))
+_MODULE_NAMES = {"__file__", "__name__", "__doc__", "__spec__",
+                 "__package__", "__loader__", "__builtins__", "__path__"}
+_BUILTINS = set(dir(builtins)) | _MODULE_NAMES
 
-from tools.split_registry import bindings  # noqa: E402
+
+def unbound_globals(path: Path) -> set[str]:
+    """Global names read somewhere in the file and bound nowhere in
+    it (module-level defs, assignments and imports, plus names a
+    nested scope assigns under a `global` declaration)."""
+    top = symtable.symtable(path.read_text(), str(path), "exec")
+    bound: set[str] = set()
+    read: set[str] = set()
+    for sym in top.get_symbols():
+        if sym.is_assigned() or sym.is_imported():
+            bound.add(sym.get_name())
+        elif sym.is_referenced():
+            read.add(sym.get_name())
+    stack = list(top.get_children())
+    while stack:
+        table = stack.pop()
+        stack.extend(table.get_children())
+        for sym in table.get_symbols():
+            if not sym.is_global():
+                continue
+            if sym.is_declared_global() and sym.is_assigned():
+                bound.add(sym.get_name())
+            if sym.is_referenced():
+                read.add(sym.get_name())
+    return read - bound - _BUILTINS
 
 
-def _parts():
-    names = sorted(
-        p.name for p in PKG.glob("p??_*.py") if p.name != "__init__.py"
+def _parts(pkg: Path) -> list[Path]:
+    return sorted(pkg.glob("p??_*.py"))
+
+
+def test_every_part_binds_what_it_reads():
+    parts = _parts(PKG)
+    assert len(parts) == 8, [p.name for p in parts]
+    unbound = {p.name: sorted(unbound_globals(p)) for p in parts}
+    unbound = {k: v for k, v in unbound.items() if v}
+    assert not unbound, (
+        f"registry parts read globals they never bind: {unbound} — "
+        "import each name in the part's header from the part that "
+        "defines it (or move the definition earlier)"
     )
-    assert len(names) == 8, names
-    return names
 
 
-def _patch_list():
-    """(part_prefix, name) pairs from __init__'s late-binding
-    assignments `_pNN.name = _pMM.name`."""
+def test_init_only_reexports():
+    """No `_pNN.<name> = ...` late-binding assignment in __init__."""
     tree = ast.parse((PKG / "__init__.py").read_text())
-    patched = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Assign) and len(node.targets) == 1:
-            t = node.targets[0]
-            if (
-                isinstance(t, ast.Attribute)
-                and isinstance(t.value, ast.Name)
-                and t.value.id.startswith("_p")
-            ):
-                patched.add((t.value.id.lstrip("_").split("_")[0], t.attr))
-    return patched
+    patches = [
+        ast.unparse(t)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign)
+        for t in node.targets
+        if isinstance(t, ast.Attribute)
+    ]
+    assert not patches, patches
 
 
-def test_forward_reference_scan_matches_patch_list():
-    part_files = _parts()
-    trees = {n: ast.parse((PKG / n).read_text()) for n in part_files}
-
-    own: dict[str, set[str]] = {}
-    for n, tree in trees.items():
-        b: set[str] = set()
-        bindings(tree.body, b)
-        own[n] = b
-
-    bound_by_other: dict[str, set[str]] = {
-        n: set().union(*(own[m] for m in part_files if m != n))
-        for n in part_files
-    }
-
-    bset = set(dir(builtins)) | {"__file__", "__name__", "__doc__"}
-    patched = _patch_list()
-
-    missing = []
-    for n, tree in trees.items():
-        refs = {
-            nd.id
-            for nd in ast.walk(tree)
-            if isinstance(nd, ast.Name) and isinstance(nd.ctx, ast.Load)
-        }
-        unresolved = refs - bset - own[n]
-        prefix = n.split("_")[0]
-        for r in sorted(unresolved & bound_by_other[n]):
-            if (prefix, r) not in patched:
-                missing.append((n, r))
-
-    assert not missing, (
-        "cross-part references not covered by an import header or the "
-        f"__init__ late-binding patch list: {missing}"
-    )
-
-
-def test_patch_list_is_not_stale():
-    """Every patch line must still correspond to a real unresolved
-    reference (a deleted reference should delete its patch line,
-    keeping the list an exact record)."""
-    part_files = _parts()
-    trees = {n: ast.parse((PKG / n).read_text()) for n in part_files}
-    own: dict[str, set[str]] = {}
-    for n, tree in trees.items():
-        b: set[str] = set()
-        bindings(tree.body, b)
-        own[n] = b
-    bset = set(dir(builtins)) | {"__file__", "__name__", "__doc__"}
-
-    needed = set()
-    for n, tree in trees.items():
-        refs = {
-            nd.id
-            for nd in ast.walk(tree)
-            if isinstance(nd, ast.Name) and isinstance(nd.ctx, ast.Load)
-        }
-        unresolved = refs - bset - own[n]
-        other = set().union(*(own[m] for m in part_files if m != n))
-        for r in unresolved & other:
-            needed.add((n.split("_")[0], r))
-
-    stale = _patch_list() - needed
-    assert not stale, f"patch lines with no matching reference: {stale}"
+if __name__ == "__main__":
+    pkg = Path(sys.argv[1]) if len(sys.argv) > 1 else PKG
+    for p in _parts(pkg):
+        for name in sorted(unbound_globals(p)):
+            print(f"{p.name}: {name}")

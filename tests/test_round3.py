@@ -6,6 +6,8 @@ anomaly detection."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -524,3 +526,25 @@ def test_semdedup_no_cartesian_on_data(spark, sf_dir):
     # data-sized cell-mate compare must be the equi SortMergeJoin
     assert plan.count("BroadcastNestedLoopJoin") <= 3
     assert "SortMergeJoin [cell" in plan
+
+    # the staged builds semdedup_cells and the tau sweep are served
+    # from: the seed assignment keeps its one bounded seed cross
+    # join, and the cell-mate compare over the materialized cells is
+    # an equi join on `cell` with no nested-loop join at all
+    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
+        "embeddings"
+    )
+    cells = spark.sql(_sim.sem_cells_build_sql())
+    cells_plan = cells._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in cells_plan
+    assert cells_plan.count("BroadcastNestedLoopJoin") <= 1
+    cells.localCheckpoint().createOrReplaceTempView("sem_cells_probe")
+    bmax_plan = (
+        spark.sql(_sim.sem_bmax_build_sql("sem_cells_probe"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "CartesianProduct" not in bmax_plan
+    assert "NestedLoopJoin" not in bmax_plan
+    assert re.search(r"(SortMerge|ShuffledHash|BroadcastHash)Join \[cell", bmax_plan)

@@ -21,15 +21,15 @@ from aurora_cdc_demo_spark.tables import TABLES  # noqa: E402
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     con.execute("SET temp_directory='/tmp/duck_spill'")
-    # Host-aware buffer-manager limit (r10, mirrors tests/helpers.py):
+    # Host-aware buffer-manager limit (r10, as in tests/helpers.py):
     # a static cap above what the OS can actually give with a Spark
     # JVM resident turns the heavy inlined oracles into OS-level
     # bad_allocs before DuckDB's own spill machinery ever engages.
     # Half of MemAvailable at connect time (floor 4GB, ceiling 40GB)
     # makes DuckDB spill deterministically whatever else is running.
-    from tests.helpers import _host_aware_duck_limit_gb
+    from aurora_cdc_demo_spark.session import duck_memory_limit_gb
 
-    gb = max(4, min(40, 2 * _host_aware_duck_limit_gb()))
+    gb = max(4, min(40, 2 * duck_memory_limit_gb()))
     con.execute(f"SET memory_limit='{gb}GB'")
     import os
 

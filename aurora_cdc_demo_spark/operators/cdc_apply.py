@@ -7,7 +7,9 @@ collect distinct tables, ThreadPoolExecutor, per-table MERGE). On
 Spark the idiomatic equivalent is ONE windowed/merged plan over all
 keys: a single hash shuffle by key, no driver loop, AQE-handled skew.
 That is what scales to 100 TB — the shuffle is on the merge key only
-and map-side partial aggregation applies where possible.
+and map-side partial aggregation applies where possible. The MERGE
+probes the state with the batch's keys, so a small batch shuffles
+no state at all.
 
 All operators take/return DataFrames so they compose and stay inside
 Catalyst (whole-stage codegen; no Python in the hot path).
@@ -119,26 +121,26 @@ def upsert_merge(
         matched + last op DELETE     -> drop row
         matched + last op not DELETE -> update (take change row)
         not matched + op not DELETE  -> insert
+        not matched + op DELETE      -> nothing
+
+    A NULL key never matches (``ON s.k = c.k``), so a non-DELETE
+    change with a NULL key is inserted as given and a snapshot row
+    with a NULL key is kept.
 
     `changes` must already be netted to one row per key (use
     ``latest_state``-style reduction first, keeping DELETE rows).
-    Implemented as a single full-outer join on the key.
+    Implemented as ``snapshot LEFT ANTI JOIN changes(keys) UNION ALL
+    changes WHERE operation <> 'DELETE'``: the snapshot is only
+    probed, and when the change side is small the planner broadcasts
+    it, so no shuffle reads the snapshot. `changes` is read twice;
+    callers feeding it from a source should materialize it first.
+    The result keeps the snapshot's column order.
     """
     keys = _key_cols(key)
-    s = snapshot.select([F.col(c).alias(f"s_{c}") for c in snapshot.columns])
-    c = changes.select([F.col(col).alias(f"c_{col}") for col in changes.columns])
-    cond = None
-    for k in keys:
-        eq = s[f"s_{k}"] == c[f"c_{k}"]
-        cond = eq if cond is None else (cond & eq)
-    joined = s.join(c, cond, "full_outer")
-    take_change = F.col(f"c_{keys[0]}").isNotNull()
-    is_delete = take_change & (F.col("c_operation") == "DELETE")
-    out_cols = [
-        F.when(take_change, F.col(f"c_{col}")).otherwise(F.col(f"s_{col}")).alias(col)
-        for col in snapshot.columns
-    ]
-    return joined.where(~is_delete).select(out_cols)
+    cols = snapshot.columns
+    kept = snapshot.join(changes.select(*keys), keys, "left_anti")
+    upserts = changes.where(F.col("operation") != "DELETE")
+    return kept.select(cols).union(upserts.select(cols))
 
 
 def net_changes(

@@ -3243,8 +3243,8 @@ def q_cdc_latest_state_incremental(spark, sf_dir):
 
     Scale: the split threshold is a 1-row broadcast; each half pays
     one key shuffle (its own latest/net reduction) and the merge is a
-    key-partitioned full-outer join — no extra passes over the raw
-    log beyond the two halves."""
+    left anti join of the state on the net's keys plus the net's
+    upserts — no extra passes over the raw log beyond the two halves."""
     log = cdc_operation_log(spark, sf_dir)
     bounds = log.agg(
         F.expr(

@@ -2346,8 +2346,8 @@ def q_tpch_rf_merge(spark, sf_dir):
     ending in 3, inserts re-key the 9-slice past a collision-free
     offset. The oracle is direct set algebra (no merge machinery),
     so the hash match certifies MERGE INTO semantics end to end on a
-    real TPC-H table. One full-outer join on o_orderkey — the
-    identical plan shape as cdc_upsert_merge (#4) at any SF. Money
+    real TPC-H table. One left anti join on o_orderkey plus a union
+    — the identical plan shape as cdc_upsert_merge (#4) at any SF. Money
     kept in integer cents per the determinism rules."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",

@@ -1914,10 +1914,10 @@ def q_cdc_topk_view_ivm(spark, sf_dir):
     proves copy ∪ re-rank ≡ recompute(all).
 
     Scale: the delta scan is the only read past the split; the
-    merge is one key-shuffle full-outer join of two key-bounded
-    states (#108's shape); affected-group set is bounded by the
-    group vocabulary and broadcast; re-ranking shuffles only the
-    affected slice. Crafted-log refill/copy-forward laws in
+    merge is one left anti join of the old state on the delta's
+    keys plus the delta's upserts (#108's shape); affected-group set
+    is bounded by the group vocabulary and broadcast; re-ranking
+    shuffles only the affected slice. Crafted-log refill/copy-forward laws in
     tests/test_round16.py."""
     ensure_utc(spark)
     return _topk_view_ivm(

@@ -15,9 +15,12 @@ dedup probe is an anti-join on its digest column — state is bounded
 by DISTINCT content, not deliveries. The quality gate is a stateless
 codegen projection (operators/text.quality_score — no Python worker).
 Like ParquetStateStore, each commit rewrites the state dir (the
-no-Delta transactional analog); at 100 TB the same logic lands on a
-table format with appends + the digest column bucketed so the
-anti-join is shuffle-free on the state side.
+no-Delta transactional analog). Its probe runs the other way round
+from ParquetStateStore's merge, which broadcasts the batch's keys
+against the state: here the batch probes the state's digests, so at
+100 TB the same logic lands on a table format with appends + the
+digest column bucketed so the anti-join is shuffle-free on the state
+side.
 
 The stream-equals-batch law is pinned in tests/test_streaming.py:
 end state == batch dedup_exact canonical ∩ quality floor, for a
@@ -99,11 +102,11 @@ class CurationStore(StagedStateStore):
             ok = clf_score_df(kept).where("keep_flag = 1").select("doc_id")
             kept = kept.join(ok, "doc_id")
         merged = kept if state is None else state.unionByName(kept)
-        # no localCheckpoint: _commit writes to a STAGING dir, so the
-        # lazy read of the current state dir completes during that
-        # write and nothing re-reads `merged` after the swap — the
-        # same discipline ParquetStateStore uses (one full state
-        # materialization per batch removed)
+        # no localCheckpoint of the state: _commit writes to a STAGING
+        # dir, so the lazy read of the current state dir completes
+        # during that write and nothing re-reads `merged` after the
+        # swap — the same discipline ParquetStateStore uses (it
+        # materializes only its batch-sized net)
         self._commit(merged, batch_id)
 
 

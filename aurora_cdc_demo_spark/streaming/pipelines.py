@@ -72,7 +72,13 @@ class StagedStateStore:
     the state is one parquet dir, each batch commits by stage-and-swap
     (write a staging dir, swap it in with two renames), and a
     `.last_batch` marker written after the swap lets a re-delivered
-    batch id be skipped."""
+    batch id be skipped.
+
+    Each commit rewrites the whole state, so a batch costs one scan
+    and one write of it. The stores probe the state with anti-joins
+    on batch-sized key sets, which shuffle no state rows; rewriting
+    only the files a batch touches needs a table format and is not
+    done here."""
 
     def __init__(self, spark: SparkSession, state_dir: str):
         self.spark = spark
@@ -148,12 +154,17 @@ class ParquetStateStore(StagedStateStore):
         if self._is_replay(batch_id):
             return  # replayed delivery — already applied
         net = net_changes(batch_df, key=self.key)
-        state = self._read_state()
+        self._commit(self._merge(self._read_state(), net), batch_id)
+
+    def _merge(self, state: DataFrame | None, net: DataFrame, merge=upsert_merge):
+        """The batch's net applied to the state. The merge reads its
+        change side twice (the anti-join keys and the upserts), so the
+        batch-sized net is materialized once: the micro-batch source
+        is scanned once, and the AQE-coalesced net adds one file to
+        the state rather than one per shuffle partition."""
         if state is None:
-            merged = net.where(F.col("operation") != "DELETE")
-        else:
-            merged = upsert_merge(state, net, key=self.key)
-        self._commit(merged, batch_id)
+            return net.where(F.col("operation") != "DELETE")
+        return merge(state, net.localCheckpoint(), key=self.key)
 
 
 class EvolvingCDCStateStore(ParquetStateStore):
@@ -228,6 +239,9 @@ class EvolvingCDCStateStore(ParquetStateStore):
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._is_replay(batch_id):
             return
+        # the DDL collect, the TRUNCATE frontier and the flatten all
+        # read the batch: materialize it so the source is scanned once
+        batch_df = batch_df.localCheckpoint()
         # 1. DDL events extend the column registry (control flow:
         #    bounded by schema-change count, not data volume)
         ddl_rows = [
@@ -262,11 +276,7 @@ class EvolvingCDCStateStore(ParquetStateStore):
                 .where(F.col("_tseq").isNull())
                 .drop("_tseq")
             )
-        if state is None:
-            merged = net.where(F.col("operation") != "DELETE")
-        else:
-            merged = upsert_merge_evolving(state, net, key=self.key)
-        self._commit(merged, batch_id)
+        self._commit(self._merge(state, net, upsert_merge_evolving), batch_id)
 
 
 def dedup_stream_exactly_once(

@@ -242,6 +242,7 @@ def main() -> None:
     # (staging untimed; the timed span is the full stream execution)
     import shutil
     import tempfile
+    from pathlib import Path
 
     from aurora_cdc_demo_spark.sources.cdc_log import cdc_operation_log
     from aurora_cdc_demo_spark.streaming.stateful import sessionize_stream
@@ -251,8 +252,16 @@ def main() -> None:
         log = cdc_operation_log(spark, sf_dir)
         n_events = log.count()
         # stage as 32 files (AQE would coalesce to ~1) so the
-        # maxFilesPerTrigger caps below yield real multi-batch runs
-        log.repartition(32).write.mode("overwrite").parquet(f"{workdir}/in")
+        # maxFilesPerTrigger caps below yield real multi-batch runs;
+        # range-partitioned by seq, with mtimes increasing in
+        # partition order, so the file source delivers the log in
+        # binlog order (it picks files by mtime)
+        log.repartitionByRange(32, "seq").write.mode("overwrite").parquet(
+            f"{workdir}/in"
+        )
+        t_stage = time.time() - 32
+        for i, f in enumerate(sorted(Path(workdir, "in").glob("part-*"))):
+            os.utime(f, (t_stage + i, t_stage + i))
 
         def _progress_dicts(query):
             out = []
@@ -332,6 +341,15 @@ def main() -> None:
         dt2 = time.perf_counter() - t0
         timings["streaming_cdc_ingest"] = round(dt2, 3)
         cdc_events_per_sec = round(n_events / dt2)
+        from aurora_cdc_demo_spark.operators.cdc_apply import latest_state
+
+        got = spark.read.parquet(f"{workdir}/state")
+        want = latest_state(log)
+        if got.count() != want.count() or got.exceptAll(want).count():
+            raise RuntimeError(
+                "streaming_cdc_ingest: committed state differs from "
+                "latest_state(log)"
+            )
 
         # Python-DataSource replay throughput: full binlog batch read
         # through the JSON-parsing partition readers (the path the

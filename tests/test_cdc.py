@@ -101,6 +101,67 @@ def test_workload_generator_deterministic_and_weighted(spark):
     assert state.groupBy("key_id").count().agg({"count": "max"}).collect()[0][0] == 1
 
 
+def test_upsert_merge_null_key_is_not_matched(spark):
+    """A NULL key never matches (MERGE's ``ON s.k = c.k``): a
+    non-DELETE change with a NULL key is inserted as given, a NULL-key
+    DELETE does nothing, and a NULL-key snapshot row is kept."""
+    schema = "key_id long, seq long, operation string, value double"
+    snapshot = spark.createDataFrame(
+        [(1, 1, "INSERT", 1.0), (None, 2, "INSERT", 2.0)], schema
+    )
+    upserts = spark.createDataFrame(
+        [(1, 3, "UPDATE", 10.0), (None, 4, "UPDATE", 4.0)], schema
+    )
+    merged = cdc_apply.upsert_merge(snapshot, upserts)
+    assert merged.columns == snapshot.columns
+    assert set(map(tuple, merged.collect())) == {
+        (1, 3, "UPDATE", 10.0),
+        (None, 2, "INSERT", 2.0),
+        (None, 4, "UPDATE", 4.0),
+    }
+    delete = spark.createDataFrame([(None, 5, "DELETE", 5.0)], schema)
+    merged = cdc_apply.upsert_merge(snapshot, delete)
+    assert set(map(tuple, merged.collect())) == set(
+        map(tuple, snapshot.collect())
+    )
+
+
+def _ancestors_of(plan: str, needle: str) -> list[str]:
+    """Node names above the first plan-tree line containing `needle`
+    (indentation gives the depth in Spark's tree strings)."""
+    stack: list[tuple[int, str]] = []
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        depth = len(line) - len(body)
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        if needle in line:
+            return [name for _, name in stack]
+        stack.append((depth, body.split(" ")[0]))
+    raise AssertionError(f"{needle} not in plan")
+
+
+def test_upsert_merge_does_not_shuffle_state(spark, sf_dir, tmp_path):
+    """For a state read from parquet and a small netted change set,
+    the merge is a left anti join and no shuffle Exchange sits above
+    the state's scan: the state is probed, never repartitioned."""
+    log = cdc_operation_log(spark, sf_dir)
+    state_dir = str(tmp_path / "merge_state")
+    cdc_apply.latest_state(log.where(F.col("seq") % 10 != 0)).write.parquet(
+        state_dir
+    )
+    state = spark.read.parquet(state_dir)
+    net = cdc_apply.net_changes(log.where(F.col("seq") % 10 == 0)).localCheckpoint()
+    merged = cdc_apply.upsert_merge(state, net)
+    merged.collect()
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert "LeftAnti" in final and "FullOuter" not in final
+    above_scan = _ancestors_of(final, "FileScan parquet")
+    assert not [n for n in above_scan if "Exchange" in n or "Shuffle" in n], final
+
+
 def test_upsert_merge_evolving_schema(spark, sf_dir):
     """A change batch adding a column merges: old rows null-filled,
     changed/new rows carry the value, deletes still drop."""

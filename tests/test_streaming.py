@@ -81,9 +81,13 @@ def test_foreachbatch_upsert_matches_replay(spark, sf_dir, log_dir, tmp_path):
     q.awaitTermination(300)
 
     got = spark.read.parquet(str(tmp_path / "state"))
-    want = latest_state(cdc_operation_log(spark, sf_dir))
+    log = cdc_operation_log(spark, sf_dir)
+    want = latest_state(log)
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
+    # each micro-batch is scanned once, although the merge reads its
+    # change side twice
+    assert sum(p.numInputRows for p in q.recentProgress) == log.count()
 
 
 def test_stateful_sessionize_closed_sessions(spark, sf_dir, log_dir, tmp_path):
@@ -424,6 +428,33 @@ def test_foreachbatch_replay_is_idempotent(spark, sf_dir, tmp_path):
     )
 
 
+def test_state_store_file_count_stays_bounded(spark, sf_dir, tmp_path):
+    """Twenty small batches: the state's parquet file count does not
+    grow with the batch count (the merged net adds one coalesced file
+    per batch, not one per shuffle partition), and the end state is
+    the replay of the whole log."""
+    log = cdc_operation_log(spark, sf_dir)
+    n_batches = 20
+    lo, hi = log.agg(F.min("seq"), F.max("seq")).first()
+    batch_no = (F.col("seq") - lo) * n_batches / (hi - lo + 1)
+    state_dir = tmp_path / "state"
+    store = ParquetStateStore(spark, str(state_dir))
+    n_files = []
+    for i in range(n_batches):
+        # consecutive seq ranges: the stream is delivered in log order
+        store.apply_batch(log.where(F.floor(batch_no) == i), batch_id=i)
+        n_files.append(len(list(state_dir.glob("*.parquet"))))
+    assert max(n_files[-5:]) <= max(n_files[:5]), n_files
+    # the state scan packs small files into few splits and the net
+    # adds one file; a net left at its 32 shuffle partitions would
+    # add one file per non-empty partition
+    assert max(n_files) <= spark.sparkContext.defaultParallelism + 1, n_files
+    got = spark.read.parquet(str(state_dir))
+    want = latest_state(log)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+
+
 def test_state_store_recovers_from_crash_window(spark, sf_dir, tmp_path):
     """A crash between rename(state_dir → .old) and rename(.staging →
     state_dir) must not lose the accumulated state: _read_state rolls
@@ -488,21 +519,10 @@ def test_ddl_event_drives_schema_evolving_merge(spark, sf_dir, tmp_path):
         .trigger(processingTime="300 milliseconds")
         .start()
     )
-    # drain: the reader commits per-table offsets; n events + 1 DDL row
-    import json
-    import time
-
-    deadline = time.time() + 180
-    while time.time() < deadline:
-        try:
-            with open(binlog / "_committed_offset.json") as fh:
-                off = json.load(fh)
-            if sum(off.get("table_offsets", {}).values()) >= n + 1:
-                break
-        except (FileNotFoundError, json.JSONDecodeError):
-            pass
-        time.sleep(0.5)
+    q.processAllAvailable()
     q.stop()
+    # n events + 1 DDL row, each scanned once by apply_batch
+    assert sum(p.numInputRows for p in q.recentProgress) == n + 1
     got = spark.read.parquet(str(tmp_path / "state"))
     # the evolved column exists, with values only possible post-DDL
     assert DDL_COLUMN in got.columns

@@ -453,6 +453,90 @@ def test_state_store_file_count_stays_bounded(spark, sf_dir, tmp_path):
     want = latest_state(log)
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
+    # the state is written compact: zstd everywhere, int64 keys as
+    # delta-packed v2 pages; and it reads back with the log's types
+    # (a TIMESTAMP_NTZ `ts` would still pass exceptAll, which coerces;
+    # a parquet read makes every column nullable, so compare names and
+    # types)
+    chunks = _column_chunks(state_dir)
+    assert {ch.compression for ch in chunks} == {"ZSTD"}
+    for col in ("key_id", "seq"):
+        encodings = [ch.encodings for ch in chunks if ch.path_in_schema == col]
+        assert all("DELTA_BINARY_PACKED" in e for e in encodings), (col, encodings)
+    assert got.schema.simpleString() == want.schema.simpleString()
+
+
+def _column_chunks(state_dir) -> list:
+    """The footer metadata of every column chunk in the state's files."""
+    import pyarrow.parquet as pq
+
+    chunks = []
+    for f in sorted(state_dir.glob("*.parquet")):
+        meta = pq.ParquetFile(f).metadata
+        for rg in range(meta.num_row_groups):
+            chunks += [meta.row_group(rg).column(c) for c in range(meta.num_columns)]
+    return chunks
+
+
+def test_state_store_upgrades_default_parquet_state(spark, sf_dir, tmp_path):
+    """A state dir in Spark's default encoding (snappy, v1 pages, INT96
+    ts) is read as-is and rewritten compact by the next commits; DuckDB
+    reads the compact files with Spark's values and a naive TIMESTAMP."""
+    import duckdb
+
+    log = cdc_operation_log(spark, sf_dir)
+    q1, q2 = log.agg(
+        F.expr("percentile_approx(seq, 0.5)"), F.expr("percentile_approx(seq, 0.75)")
+    ).first()
+    state_dir = tmp_path / "state"
+    latest_state(log.where(F.col("seq") <= q1)).write.parquet(str(state_dir))
+    assert {ch.compression for ch in _column_chunks(state_dir)} == {"SNAPPY"}
+    store = ParquetStateStore(spark, str(state_dir))
+    store.apply_batch(log.where((F.col("seq") > q1) & (F.col("seq") <= q2)), 1)
+    store.apply_batch(log.where(F.col("seq") > q2), 2)
+    got = spark.read.parquet(str(state_dir))
+    want = latest_state(log)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert {ch.compression for ch in _column_chunks(state_dir)} == {"ZSTD"}
+
+    # min/max ts as epoch micros, so the host's time zone cannot shift
+    # the collected Python datetimes
+    aggs = "count(*), sum(key_id), sum(seq), {us}(min(ts)), {us}(max(ts))"
+    spark_row = got.selectExpr(*aggs.format(us="unix_micros").split(", ")).first()
+    con = duckdb.connect()
+    files = f"'{state_dir}/*.parquet'"
+    duck_row = con.execute(f"SELECT {aggs.format(us='epoch_us')} FROM {files}").fetchone()
+    assert tuple(duck_row) == tuple(spark_row)
+    ts_type = con.execute(
+        f"SELECT column_type FROM (DESCRIBE SELECT ts FROM {files})"
+    ).fetchone()[0]
+    assert ts_type == "TIMESTAMP"
+
+
+def test_ddl_registry_survives_crash_mid_write(spark, tmp_path, monkeypatch):
+    """A crash part-way through writing the DDL column registry leaves
+    the previous registry loadable (the write goes aside, then renames)."""
+    import json
+
+    from aurora_cdc_demo_spark.streaming.pipelines import EvolvingCDCStateStore
+
+    store = EvolvingCDCStateStore(spark, str(tmp_path / "state"))
+    store._register_ddl(["ALTER TABLE users_1 ADD COLUMN tier VARCHAR(8)"])
+    assert store._load_columns() == ["tier"]
+
+    def dump_then_crash(obj, fh, **kw):
+        fh.write(json.dumps(obj)[:7])
+        raise OSError("crash mid-write")
+
+    monkeypatch.setattr(json, "dump", dump_then_crash)
+    with pytest.raises(OSError):
+        store._register_ddl(["ALTER TABLE users_1 ADD COLUMN region VARCHAR(8)"])
+    monkeypatch.undo()
+    assert store._load_columns() == ["tier"]
+    # the next DDL batch recovers and extends the registry
+    store._register_ddl(["ALTER TABLE users_1 ADD COLUMN region VARCHAR(8)"])
+    assert store._load_columns() == ["tier", "region"]
 
 
 def test_state_store_recovers_from_crash_window(spark, sf_dir, tmp_path):

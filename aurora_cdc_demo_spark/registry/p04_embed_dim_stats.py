@@ -1180,10 +1180,15 @@ def _pca_fd(a: str, b: str, div: str) -> str:
     even for negative a: subtract the positive remainder first, then
     divide exactly — Spark's `div` truncates toward zero while
     DuckDB's `//` floors, so raw integer division of a negative
-    numerator silently disagrees by one."""
-    return (
-        f"((({a}) - (((({a}) % ({b})) + ({b})) % ({b}))) {div} ({b}))"
-    )
+    numerator silently disagrees by one.
+
+    Both operands are widened to at least BIGINT first (adding a
+    BIGINT zero): on INT32 operands `a - posrem` can leave the INT32
+    range, which raises on both engines (a=-1968526682, b=178956971).
+    A wider operand (DECIMAL(38,0), HUGEINT) keeps its type, since a
+    cast down to BIGINT would overflow where it does not."""
+    a, b = f"(({a}) + CAST(0 AS BIGINT))", f"(({b}) + CAST(0 AS BIGINT))"
+    return f"(({a} - ((({a} % {b}) + {b}) % {b})) {div} {b})"
 
 
 def _pca_comps_cte(dialect: str) -> str:

@@ -13,25 +13,29 @@ socket — deterministic and testable. The reference's JSON offset
 {binlog_file, binlog_position, table_offsets} (reference: lines 20-41)
 maps to our {"file_idx": i, "row": r, "table_offsets": {...}}.
 
-Batch read partitions per file (parallel scan); the stream reader is
-a SimpleDataSourceStreamReader emitting bounded micro-batches with
+The batch read packs whole log files, in log order, into partitions
+sized by bytes (PARTITION_BYTES of log per read task, at most two per
+core), since every Python task pays a fixed start-up cost that a small
+log's parse does not cover. The stream reader is a
+SimpleDataSourceStreamReader emitting bounded micro-batches with
 exactly-once replay via readBetweenOffsets. With the
 ``tables_per_batch`` option the reader switches to the reference's
 priority-driven per-table batch selection (reference: lines 350-369):
 each micro-batch serves the highest-priority pending tables only,
 tracked by per-table offsets.
 
-Scale note: per-file partitions parallelize the scan across
-executors; `batch_size` bounds per-trigger work exactly like the
-reference's `batch_size` option (reference: line 121). The priority
-reader re-lists the log per trigger — that is the replay-harness
-analog of the reference polling the binlog socket; the DATA path
-(everything downstream of read) stays fully distributed.
+Scale note: a large log spreads over up to two partitions per core;
+`batch_size` bounds per-trigger work exactly like the reference's
+`batch_size` option (reference: line 121). The priority reader
+re-lists the log per trigger — that is the replay-harness analog of
+the reference polling the binlog socket; the DATA path (everything
+downstream of read) stays fully distributed.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 from collections.abc import Iterator
 from datetime import datetime, timedelta, timezone
@@ -310,23 +314,33 @@ class _FilePartition(InputPartition):
         return fp if isinstance(fp, list) else [fp]
 
 
-def _group_files(files: list[str], cpus: int) -> list[list[str]]:
-    """Pack the per-file scan units into fewer partitions: one task
-    per 2500-row file means a huge log pays a Python-worker round
-    trip per ~1 MB (guide: small files hurt twice). Keep every core
-    busy for at least two waves, but never fewer files per partition
-    than 1 — at driver SFs (≤ 2×cpus files) this is the identity and
-    the plan is unchanged; the grouping only engages when the log is
-    big enough that task overhead, not parallelism, is the binding
-    cost. Round-robin assignment keeps partitions size-balanced even
-    when trailing files are short."""
-    n_parts = min(len(files), max(2 * cpus, 1))
-    if n_parts == len(files):
-        return [[f] for f in files]
-    groups: list[list[str]] = [[] for _ in range(n_parts)]
-    for i, f in enumerate(files):
-        groups[i % n_parts].append(f)
-    return groups
+# Bytes of log per read task. Measured on a 4-core host: a warm Arrow
+# parse runs at ~220 MB/s (4 files, 4.74 MB in 22 ms of CPU), while each
+# Python task pays a fixed ~30-55 ms of CPU and ~2.7 MB of reads (the
+# worker's per-task zipimport re-scan of pyspark.zip). A 32 MB task
+# parses for ~145 ms, so the fixed cost stays under about a quarter of
+# it. sf0.01 (4.7 MB) reads in one task, sf0.1 (~47 MB) in two.
+PARTITION_BYTES = 32 * 1024 * 1024
+
+
+def _group_files(files: list[str], sizes: list[int], cpus: int) -> list[list[str]]:
+    """Pack whole log files into read partitions by bytes: one
+    partition per PARTITION_BYTES of log, at least 1 and at most
+    2 x cpus (two waves of tasks on a large log) or the file count.
+    Each partition holds a contiguous run of files, so concatenating
+    the partitions gives the log order: a file goes to the partition
+    its first byte falls in when the log is cut into n equal byte
+    ranges (a range that one large file spans leaves a partition
+    empty, and it is dropped)."""
+    total = sum(sizes)
+    n = min(len(files), 2 * cpus, math.ceil(total / PARTITION_BYTES))
+    n = max(n, 1)
+    groups: list[list[str]] = [[] for _ in range(n)]
+    start = 0
+    for f, size in zip(files, sizes):
+        groups[min(start * n // max(total, 1), n - 1)].append(f)
+        start += size
+    return [g for g in groups if g]
 
 
 class CDCReplayBatchReader(DataSourceReader):
@@ -339,10 +353,9 @@ class CDCReplayBatchReader(DataSourceReader):
         )
 
     def partitions(self):
-        return [
-            _FilePartition(g)
-            for g in _group_files(_log_files(self.path), self.cpus)
-        ]
+        files = _log_files(self.path)
+        sizes = [os.path.getsize(f) for f in files]
+        return [_FilePartition(g) for g in _group_files(files, sizes, self.cpus)]
 
     def read(self, partition: _FilePartition) -> Iterator:
         """Emit the file as ONE pyarrow.RecordBatch instead of
@@ -524,10 +537,14 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
         return total
 
     def commit(self, end: dict) -> None:
-        # Checkpoint the committed offset (reference: lines 479-489)
+        # Checkpoint the committed offset (reference: lines 479-489).
+        # Written aside and renamed, so a crash mid-dump leaves the
+        # previous marker whole instead of a truncated file.
         marker = os.path.join(self.path, "_committed_offset.json")
-        with open(marker, "w") as fh:
+        tmp = marker + ".tmp"
+        with open(tmp, "w") as fh:
             json.dump(end, fh)
+        os.replace(tmp, marker)
 
 
 class CDCReplayDataSource(DataSource):

@@ -27,6 +27,10 @@ from pyspark.sql import functions as F
 
 from ..operators.cdc_apply import net_changes, upsert_merge, upsert_merge_evolving
 
+# the committed batch id, a dot-file inside the state dir (Spark's and
+# pyarrow's readers skip it)
+BATCH_MARKER = ".last_batch"
+
 
 def read_cdc_stream(
     spark: SparkSession, log_dir: str, watermark: str | None = "30 minutes"
@@ -73,9 +77,12 @@ def windowed_event_counts(stream: DataFrame) -> DataFrame:
 class StagedStateStore:
     """Exactly-once state plumbing shared by the foreachBatch stores:
     the state is one parquet dir, each batch commits by stage-and-swap
-    (write a staging dir, swap it in with two renames), and a
-    `.last_batch` marker written after the swap lets a re-delivered
-    batch id be skipped.
+    (write a staging dir, swap it in with two renames), and the batch
+    id, written into the staging dir before the swap as `.last_batch`,
+    lets a re-delivered batch id be skipped. The marker is swapped in
+    with the state it describes, so no crash point leaves a state that
+    holds a batch its marker does not name (Spark's parquet reader
+    skips dot-files; glob readers match `*.parquet`).
 
     Each commit rewrites the whole state, so a batch costs one scan
     and one write of it. The stores probe the state with anti-joins
@@ -108,18 +115,25 @@ class StagedStateStore:
             old.rename(state)
         if not state.exists():
             return None  # genuinely the first batch
+        # a dir with no data files (say, created empty ahead of the
+        # stream) is no state either: Spark cannot infer its schema
+        if all(f.startswith(("_", ".")) for f in os.listdir(state)):
+            return None
         return self.spark.read.parquet(self.state_dir)
 
     def _is_replay(self, batch_id: int) -> bool:
-        marker = Path(self.state_dir + ".last_batch")
+        # the swapped-in state's marker; a swap cut between its renames
+        # leaves no state dir, and .old's state predates this batch
+        marker = Path(self.state_dir, BATCH_MARKER)
         return marker.exists() and marker.read_text() == str(batch_id)
 
     def _commit(self, merged: DataFrame, batch_id: int) -> None:
-        """Stage-and-swap transactional commit: the new state lands in
-        a side dir and is swapped in, so a crash mid-write leaves the
-        previous state intact (the no-Delta analog of a transactional
-        commit); _read_state rolls back the .old dir if we crash
-        between the two renames."""
+        """Stage-and-swap transactional commit: the new state and its
+        batch id land in a side dir that is swapped in, so a crash
+        mid-write leaves the previous state intact and a crash after
+        the swap leaves a state whose marker names this batch (the
+        no-Delta analog of a transactional commit); _read_state rolls
+        back the .old dir if we crash between the two renames."""
         staging = self.state_dir + ".staging"
         (
             merged.write.mode("overwrite")
@@ -127,13 +141,13 @@ class StagedStateStore:
             .option("parquet.writer.version", "v2")
             .parquet(staging)
         )
+        Path(staging, BATCH_MARKER).write_text(str(batch_id))
         old = self.state_dir + ".old"
         shutil.rmtree(old, ignore_errors=True)
         if Path(self.state_dir).exists():
             Path(self.state_dir).rename(old)
         Path(staging).rename(self.state_dir)
         shutil.rmtree(old, ignore_errors=True)
-        Path(self.state_dir + ".last_batch").write_text(str(batch_id))
 
     def start(self, stream: DataFrame, checkpoint_dir: str):
         return (

@@ -5,13 +5,16 @@ batch read, streaming read with offsets, exactly-once replay."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from aurora_cdc_demo_spark.sources.cdc_datasource import (
+    PARTITION_BYTES,
     CDCReplayDataSource,
     CDCReplayStreamReader,
+    _group_files,
     write_binlog_from_events,
 )
 
@@ -145,6 +148,60 @@ def test_stream_commit_checkpoint(binlog_dir, tmp_path):
     reader.commit(end)
     with open(f"{path}/_committed_offset.json") as fh:
         assert json.load(fh) == end
+
+
+def test_stream_commit_survives_crash_mid_write(binlog_dir, monkeypatch):
+    """A crash part-way through writing the committed-offset marker
+    leaves the previous marker whole (written aside, then renamed)."""
+    path, _ = binlog_dir
+    reader = CDCReplayStreamReader({"path": path, "batch_size": "500"})
+    _, first = reader.read(reader.initialOffset())
+    reader.commit(first)
+    _, second = reader.read(first)
+
+    def dump_then_crash(obj, fh, **kw):
+        fh.write(json.dumps(obj)[:7])
+        raise OSError("crash mid-write")
+
+    monkeypatch.setattr(json, "dump", dump_then_crash)
+    with pytest.raises(OSError):
+        reader.commit(second)
+    monkeypatch.undo()
+    with open(f"{path}/_committed_offset.json") as fh:
+        assert json.load(fh) == first
+
+
+def test_group_files_packs_by_bytes_in_log_order():
+    """Every file lands in exactly one partition, the partitions
+    concatenate to the log order, a few-MB log is one partition, and
+    a large one is capped at two partitions per core."""
+    mb = 1024 * 1024
+
+    def check(sizes, cpus):
+        files = [f"binlog.{i:06d}.jsonl" for i in range(len(sizes))]
+        groups = _group_files(files, sizes, cpus)
+        assert [f for g in groups for f in g] == files
+        return groups
+
+    assert len(check([mb] * 4 + [mb // 3], cpus=4)) == 1  # sf0.01-sized
+    assert len(check([mb] * 47, cpus=4)) == 2  # sf0.1-sized
+    assert len(check([mb] * 470, cpus=4)) == 8
+    assert len(check([mb] * 470, cpus=32)) == -(-470 * mb // PARTITION_BYTES)
+    assert len(check([PARTITION_BYTES] * 3, cpus=4)) == 3
+    assert len(check([0, 0], cpus=4)) == 1
+    assert check([], cpus=4) == []
+
+
+def test_replay_typed_matches_oracle_at_sf001(spark, sf_dir):
+    """cdc_replay_typed at sf0.01, where the whole binlog reads as one
+    byte-packed partition, still matches its DuckDB oracle."""
+    from aurora_cdc_demo_spark.registry import read_binlog
+
+    from .helpers import assert_matches_oracle
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    assert read_binlog(spark, sf001).rdd.getNumPartitions() == 1
+    assert_matches_oracle(spark, "cdc_replay_typed", sf001)
 
 
 def test_streaming_query_end_to_end(registered, binlog_dir, tmp_path):

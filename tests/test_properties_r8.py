@@ -127,7 +127,7 @@ def test_posrem_floor_division_cross_engine():
     leans on (Spark div truncates, DuckDB // floors; the posrem
     rewrite removes the disagreement)."""
     import duckdb
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from aurora_cdc_demo_spark.registry import _pca_fd
@@ -135,6 +135,7 @@ def test_posrem_floor_division_cross_engine():
     con = duckdb.connect()
 
     @settings(max_examples=200, deadline=None)
+    @example(a=-1_968_526_682, b=178_956_971)  # INT32 operands overflowed
     @given(
         a=st.integers(min_value=-(10**17), max_value=10**17),
         b=st.integers(min_value=1, max_value=10**12),
@@ -156,6 +157,7 @@ def test_posrem_floor_division_spark(spark):
     cases = [
         (7, 3), (-7, 3), (6, 3), (-6, 3), (0, 5), (-1, 10**9),
         (10**17, 7), (-(10**17), 7), (1, 1), (-1, 1),
+        (-1_968_526_682, 178_956_971),  # INT32 operands overflowed
     ]
     exprs = ", ".join(
         f"{_pca_fd(str(a), str(b), 'div')} AS c{i}"

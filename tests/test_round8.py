@@ -593,7 +593,7 @@ def test_streaming_line_dedup_equals_batch(spark, sf_dir, tmp_path):
     # replay idempotence: re-applying the last batch id is a no-op
     before = sorted(got.items())
     last_batch = int(
-        (tmp_path / "state.last_batch").read_text()
+        (tmp_path / "state" / ".last_batch").read_text()
     )
     store.apply_batch(docs.limit(5), last_batch)
     after = sorted(
@@ -929,8 +929,8 @@ def test_line_dedup_store_crash_recovery(spark, sf_dir, tmp_path):
     state = Path(tmp_path / "state")
     shutil.rmtree(state)
     shutil.rmtree(tmp_path / "state.old", ignore_errors=True)
+    # .old carries its own batch marker (batch 0), as in a real crash
     (tmp_path / "pre1").rename(tmp_path / "state.old")
-    (tmp_path / "state.last_batch").write_text("0")  # marker rewound
 
     recovered = store._read_state()
     assert recovered is not None

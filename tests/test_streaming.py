@@ -539,6 +539,63 @@ def test_ddl_registry_survives_crash_mid_write(spark, tmp_path, monkeypatch):
     assert store._load_columns() == ["tier", "region"]
 
 
+def test_empty_state_dir_is_the_first_batch(spark, sf_dir, tmp_path):
+    """A state dir that exists but holds no data files (say, created
+    ahead of the stream) is no state: the first batch commits over it
+    instead of failing to infer a schema from an empty dir."""
+    log = cdc_operation_log(spark, sf_dir)
+    state_dir = tmp_path / "state"
+    state_dir.mkdir()
+    ParquetStateStore(spark, str(state_dir)).apply_batch(log, batch_id=0)
+    got = spark.read.parquet(str(state_dir))
+    want = latest_state(log)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+
+
+def test_redelivery_after_a_crash_past_the_swap_applies_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash right after the swap's last rename must not let the
+    re-delivered batch apply a second time. LineDedupStore appends its
+    batch to the state, so a second apply would duplicate every
+    (doc_id, line_no) of the batch; the batch id is committed with
+    the state it describes, so the re-delivery is skipped."""
+    from pathlib import Path
+
+    from aurora_cdc_demo_spark.streaming.curation import LineDedupStore
+    from aurora_cdc_demo_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    first, second = docs.where("doc_id < 100"), docs.where("doc_id >= 100")
+    state_dir = str(tmp_path / "state")
+    LineDedupStore(spark, state_dir).apply_batch(first, 0)
+
+    rename = Path.rename
+
+    def rename_then_crash(self, target):
+        moved = rename(self, target)
+        if str(self).endswith(".staging"):
+            raise OSError("crash after the swap")
+        return moved
+
+    monkeypatch.setattr(Path, "rename", rename_then_crash)
+    with pytest.raises(OSError):
+        LineDedupStore(spark, state_dir).apply_batch(second, 1)
+    monkeypatch.undo()
+    # restart: the stream re-delivers batch 1
+    LineDedupStore(spark, state_dir).apply_batch(second, 1)
+
+    got = spark.read.parquet(state_dir)
+    assert got.count() == got.select("doc_id", "line_no").distinct().count()
+    clean = LineDedupStore(spark, str(tmp_path / "clean"))
+    clean.apply_batch(first, 0)
+    clean.apply_batch(second, 1)
+    want = spark.read.parquet(str(tmp_path / "clean"))
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+
+
 def test_state_store_recovers_from_crash_window(spark, sf_dir, tmp_path):
     """A crash between rename(state_dir → .old) and rename(.staging →
     state_dir) must not lose the accumulated state: _read_state rolls
@@ -834,7 +891,7 @@ def test_streaming_curation_equals_batch(spark, sf_dir, tmp_path):
     assert got == want and got
 
     # exactly-once: replaying the last committed batch id is a no-op
-    last = int(Path(str(tmp_path / "admitted") + ".last_batch").read_text())
+    last = int(Path(tmp_path / "admitted" / ".last_batch").read_text())
     store.apply_batch(docs.limit(10), last)
     again = {
         r["doc_id"]

@@ -40,15 +40,7 @@ def latest_state(
 
     One shuffle on the key; row_number is whole-stage-codegen'd.
     """
-    w = Window.partitionBy(*_key_cols(key)).orderBy(
-        F.col(ts).desc(), F.col(seq).desc()
-    )
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .where(F.col("operation") != "DELETE")
-    )
+    return net_changes(log, key, ts, seq).where(F.col("operation") != "DELETE")
 
 
 def latest_state_with_truncate(

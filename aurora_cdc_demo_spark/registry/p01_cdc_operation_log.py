@@ -811,7 +811,20 @@ def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
 def read_binlog(spark, sf_dir: str):
     from ..sources.cdc_datasource import CDCReplayDataSource
 
-    spark.dataSource.register(CDCReplayDataSource)
+    # Spark checks a new Python data source name against the ACTIVE
+    # session's sources but resolves a read against the reading
+    # session's own. Registering with ``spark`` active puts the name
+    # where its reads look, in any session (a newSession() included).
+    jsession = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    active = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(CDCReplayDataSource)
+    finally:
+        if active.isDefined():
+            jsession.setActiveSession(active.get())
+        else:
+            jsession.clearActiveSession()
     return spark.read.format("cdc_replay").option("path", binlog_path(sf_dir)).load()
 
 

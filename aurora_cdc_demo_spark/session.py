@@ -14,10 +14,10 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "aurora-cdc-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    # SPARK_GRAFT_MASTER overrides the master URL — the r9 scaling
-    # bench uses local-cluster[2,16,4096] to get a REAL executor/
-    # exchange split (serialized shuffle files, per-executor memory)
-    # that local[N]'s single-JVM fast paths structurally hide.
+    # SPARK_GRAFT_MASTER is the master URL deployment setting, e.g.
+    # local-cluster[2,16,4096] for real executor JVMs (serialized
+    # shuffle files, per-executor memory) that local[N]'s single-JVM
+    # fast paths hide.
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     spark = (
         SparkSession.builder.master(master)

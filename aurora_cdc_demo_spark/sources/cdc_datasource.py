@@ -301,17 +301,10 @@ def _parse_file_arrow(path: str):
 
 
 class _FilePartition(InputPartition):
-    """One scan partition holding one or more whole log files (the
-    legacy single-file form is kept constructible for the stream
-    reader's bookkeeping and tests)."""
+    """One scan partition holding one or more whole log files."""
 
-    def __init__(self, file_path: str | list[str]):
-        self.file_path = file_path
-
-    @property
-    def files(self) -> list[str]:
-        fp = self.file_path
-        return fp if isinstance(fp, list) else [fp]
+    def __init__(self, files: list[str]):
+        self.files = files
 
 
 # Bytes of log per read task. Measured on a 4-core host: a warm Arrow
@@ -412,23 +405,29 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
 
     # -- global sequential mode ------------------------------------
 
-    def _read_range(self, start: dict, limit: int | None) -> tuple[list, dict]:
+    def _read_range(
+        self, start: dict, limit: int | None, end: dict | None = None
+    ) -> tuple[list, dict]:
+        """Parse the log from ``start`` until ``limit`` rows are read
+        or the position reaches ``end`` (no file past it is opened)."""
         files = _log_files(self.path)
+        stop = (end["file_idx"], end["row"]) if end is not None else (len(files), 0)
         out: list[tuple] = []
         counts = dict(start.get("table_offsets", {}))
         fi, row = start["file_idx"], start["row"]
-        while fi < len(files):
+        while fi < len(files) and (fi, row) < stop:
             with open(files[fi]) as fh:
                 lines = [ln for ln in fh if ln.strip()]
-            while row < len(lines):
+            while row < len(lines) and (fi, row) < stop:
                 if limit is not None and len(out) >= limit:
                     return out, {"file_idx": fi, "row": row, "table_offsets": counts}
                 parsed = _parse_line(lines[row])
                 counts[parsed[_TABLE_IDX]] = counts.get(parsed[_TABLE_IDX], 0) + 1
                 out.append(parsed)
                 row += 1
-            fi, row = fi + 1, 0
-        return out, {"file_idx": fi, "row": 0, "table_offsets": counts}
+            if row >= len(lines):
+                fi, row = fi + 1, 0
+        return out, {"file_idx": fi, "row": row, "table_offsets": counts}
 
     # -- priority (per-table) mode ---------------------------------
 
@@ -521,20 +520,8 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
                 out.extend(rows[lo:hi])
             out.sort(key=lambda r: r[5])  # global seq order, as read()
             return iter(out)
-        rows, _ = self._read_range(start, None)
-        n = self._count_between(start, end)
-        return iter(rows[:n])
-
-    def _count_between(self, start: dict, end: dict) -> int:
-        files = _log_files(self.path)
-        total = 0
-        for fi in range(start["file_idx"], min(end["file_idx"] + 1, len(files))):
-            with open(files[fi]) as fh:
-                n_lines = sum(1 for ln in fh if ln.strip())
-            lo = start["row"] if fi == start["file_idx"] else 0
-            hi = end["row"] if fi == end["file_idx"] else n_lines
-            total += max(0, hi - lo)
-        return total
+        rows, _ = self._read_range(start, None, end)
+        return iter(rows)
 
     def commit(self, end: dict) -> None:
         # Checkpoint the committed offset (reference: lines 479-489).

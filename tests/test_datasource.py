@@ -10,6 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from aurora_cdc_demo_spark.registry import read_binlog
+from aurora_cdc_demo_spark.sources import cdc_datasource
 from aurora_cdc_demo_spark.sources.cdc_datasource import (
     PARTITION_BYTES,
     CDCReplayDataSource,
@@ -129,16 +131,43 @@ def test_stream_offsets_progress(binlog_dir):
     assert batches == -(-n // 1234)
 
 
-def test_stream_replay_between_offsets(binlog_dir):
+def test_stream_replay_between_offsets(binlog_dir, monkeypatch):
     """Exactly-once recovery: re-reading [start, end) returns the
-    identical batch."""
-    path, _ = binlog_dir
+    identical batch for every batch of a full drain (500-row batches
+    over 300-row files, so most start mid-file), and parses only the
+    batch's own rows."""
+    path, n = binlog_dir
     reader = CDCReplayStreamReader({"path": path, "batch_size": "500"})
+    batches = []
     start = reader.initialOffset()
-    first, end = reader.read(start)
-    first = list(first)
-    replayed = list(reader.readBetweenOffsets(start, end))
-    assert first == replayed
+    while True:
+        rows, end = reader.read(start)
+        rows = list(rows)
+        if not rows:
+            break
+        batches.append((start, end, rows))
+        start = end
+    assert sum(len(rows) for _, _, rows in batches) == n
+    assert any(s["row"] for s, _, _ in batches)
+    parse, parsed = cdc_datasource._parse_line, []
+
+    def counting_parse(line):
+        parsed.append(line)
+        return parse(line)
+
+    monkeypatch.setattr(cdc_datasource, "_parse_line", counting_parse)
+    for start, end, rows in batches:
+        parsed.clear()
+        assert list(reader.readBetweenOffsets(start, end)) == rows
+        assert len(parsed) == len(rows)
+
+
+def test_read_binlog_in_a_second_session(spark, sf_dir):
+    """The replay source resolves in a session made by newSession()
+    while the root session, which registered it first, is active."""
+    spark.createDataFrame([(1,)], "x int")  # makes the root session active
+    n = read_binlog(spark, sf_dir).count()
+    assert read_binlog(spark.newSession(), sf_dir).count() == n > 0
 
 
 def test_stream_commit_checkpoint(binlog_dir, tmp_path):

@@ -1,0 +1,46 @@
+"""tools/: the scripts on disk are the ones README's Layout block
+names, each compiles, and tools/scale.py records seconds, exponents
+and errors."""
+
+from __future__ import annotations
+
+import json
+import re
+from pathlib import Path
+
+from tools import scale
+
+REPO = Path(__file__).resolve().parents[1]
+
+
+def test_tools_match_readme_layout_and_compile():
+    readme = (REPO / "README.md").read_text()
+    layout = readme.split("## Layout", 1)[1].split("```")[1]
+    named = set(re.findall(r"^tools/(\w+\.py)", layout, re.M))
+    on_disk = {p.name for p in (REPO / "tools").glob("*.py")}
+    assert on_disk == named
+    for name in sorted(on_disk):
+        path = REPO / "tools" / name
+        compile(path.read_text(), str(path), "exec")
+
+
+def test_scale_records_seconds_exponents_and_errors(spark, sf_dir, tmp_path):
+    # a second point over the same sf0.001 tables, and a point with no tables
+    (tmp_path / "sf0.002").symlink_to(sf_dir)
+    points = [sf_dir, str(tmp_path / "sf0.002"), str(tmp_path / "sf0.004")]
+    names = ["cdc_operation_log", "cdc_latest_state"]
+    out = tmp_path / "scale.json"
+    assert scale.main([str(out), *points, *(a for n in names for a in ("-q", n))]) == 0
+    record = json.loads(out.read_text())
+    assert [p["sf"] for p in record["points"]] == [0.001, 0.002, 0.004]
+    first, second, missing = record["points"]
+    assert all(sorted(p["results"]) == sorted(names) for p in record["points"])
+    for point in (first, second):
+        assert (point["n_ok"], point["n_error"]) == (2, 0)
+        assert all(t > 0 for t in point["results"].values())
+    assert (missing["n_ok"], missing["n_error"]) == (0, 2)
+    assert all(v.startswith("ERROR: ") for v in missing["results"].values())
+    timed, failed = record["pairs"]
+    assert (timed["from"], timed["to"]) == (first["sf_dir"], second["sf_dir"])
+    assert all(isinstance(x, float) for x in timed["exponents"].values())
+    assert failed["exponents"] == {n: None for n in names}

@@ -15,8 +15,10 @@ maps to our {"file_idx": i, "row": r, "table_offsets": {...}}.
 
 The batch read packs whole log files, in log order, into partitions
 sized by bytes (PARTITION_BYTES of log per read task, at most two per
-core), since every Python task pays a fixed start-up cost that a small
-log's parse does not cover. The stream reader is a
+core), since every Python task pays a fixed cost that a small log's
+parse does not cover: ~16 ms of CPU and ~5 KB of reads under
+``session.get_spark``, ~280 ms and ~2.6 MB in a session whose workers
+import Spark's pyspark.zip. The stream reader is a
 SimpleDataSourceStreamReader emitting bounded micro-batches with
 exactly-once replay via readBetweenOffsets. With the
 ``tables_per_batch`` option the reader switches to the reference's
@@ -308,11 +310,15 @@ class _FilePartition(InputPartition):
 
 
 # Bytes of log per read task. Measured on a 4-core host: a warm Arrow
-# parse runs at ~220 MB/s (4 files, 4.74 MB in 22 ms of CPU), while each
-# Python task pays a fixed ~30-55 ms of CPU and ~2.7 MB of reads (the
-# worker's per-task zipimport re-scan of pyspark.zip). A 32 MB task
-# parses for ~145 ms, so the fixed cost stays under about a quarter of
-# it. sf0.01 (4.7 MB) reads in one task, sf0.1 (~47 MB) in two.
+# parse runs at ~220 MB/s (4 files, 4.74 MB in 22 ms of CPU). A Python
+# task in a reused worker pays a fixed cost: under session.get_spark
+# ~16 ms of CPU and ~5 KB of reads (median of 20 one-row UDF tasks);
+# in a session whose workers import Spark's pyspark.zip, such as a
+# vanilla SparkSession, ~280 ms and 2.56 MB, the per-task zipimport
+# re-scan (session.use_installed_pyspark). A 32 MB task parses for
+# ~145 ms, a tenth of get_spark's fixed cost; the size stays at 32 MB
+# so a vanilla session's cost stays under about twice the parse.
+# sf0.01 (4.7 MB) reads in one task, sf0.1 (~47 MB) in two.
 PARTITION_BYTES = 32 * 1024 * 1024
 
 
@@ -362,7 +368,10 @@ class CDCReplayBatchReader(DataSourceReader):
         and both derive every field from the same raw record the same
         way). A file outside the canonical writer format (unexpected
         fields / types) falls back to the per-line tuple path, so the
-        reader stays general."""
+        reader stays general. A directory with no log files plans no
+        partition, and Spark then calls ``read(None)`` once: 0 rows."""
+        if partition is None:
+            return
         for file_path in partition.files:
             batch = _parse_file_arrow(file_path)
             if batch is not None:

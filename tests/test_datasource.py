@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from aurora_cdc_demo_spark.registry import read_binlog
 from aurora_cdc_demo_spark.sources import cdc_datasource
 from aurora_cdc_demo_spark.sources.cdc_datasource import (
+    CDC_EVENT_SCHEMA,
     PARTITION_BYTES,
     CDCReplayDataSource,
     CDCReplayStreamReader,
@@ -164,10 +166,13 @@ def test_stream_replay_between_offsets(binlog_dir, monkeypatch):
 
 def test_read_binlog_in_a_second_session(spark, sf_dir):
     """The replay source resolves in a session made by newSession()
-    while the root session, which registered it first, is active."""
+    while the root session, which registered it first, is active; the
+    new session starts its Python processes the same way."""
     spark.createDataFrame([(1,)], "x int")  # makes the root session active
     n = read_binlog(spark, sf_dir).count()
-    assert read_binlog(spark.newSession(), sf_dir).count() == n > 0
+    second = spark.newSession()
+    assert second.sparkContext.pythonExec == spark.sparkContext.pythonExec
+    assert read_binlog(second, sf_dir).count() == n > 0
 
 
 def test_stream_commit_checkpoint(binlog_dir, tmp_path):
@@ -403,3 +408,16 @@ def test_priority_mode_through_spark_stream(registered, binlog_dir, tmp_path):
         .collect()
     }
     assert got == want
+
+
+def test_batch_read_of_a_dir_without_log_files(registered, tmp_path):
+    """A log dir with no .jsonl files reads as 0 rows with the full
+    schema; a missing dir fails with a FileNotFoundError naming it."""
+    (tmp_path / "notes.txt").write_text("not a log file\n")
+    df = registered.read.format("cdc_replay").option("path", str(tmp_path)).load()
+    assert df.columns == CDC_EVENT_SCHEMA.names and len(df.columns) == 22
+    assert df.collect() == []
+    missing = tmp_path / "missing"
+    df = registered.read.format("cdc_replay").option("path", str(missing)).load()
+    with pytest.raises(Exception, match=rf"FileNotFoundError.*{re.escape(str(missing))}"):
+        df.collect()

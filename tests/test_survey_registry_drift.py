@@ -15,6 +15,7 @@ from pathlib import Path
 from aurora_cdc_demo_spark.registry import ORACLES, QUERIES
 
 SURVEY = Path(__file__).resolve().parents[1] / "SURVEY.md"
+README = Path(__file__).resolve().parents[1] / "README.md"
 
 # | 123 | `key_name` | ... |  — numbered §2 checklist rows
 _ROW = re.compile(r"^\|\s*(\d+)\s*\|\s*`([a-z0-9_]+)`\s*\|", re.M)
@@ -75,3 +76,15 @@ def test_survey_oracle_marks_match_oracles():
         f"oracle-less keys {sorted(no_oracle)} != SURVEY rows-only "
         f"marks {sorted(marked_rows_only)}"
     )
+
+
+def test_readme_counts_match_registry():
+    """README's query and oracle counts (the intro and the Layout
+    block) are the registry's own."""
+    text = README.read_text()
+    counts = [
+        *re.findall(r"(\d+) registered queries, (\d+) oracle-checked", text),
+        *re.findall(r"registry/\s+(\d+) queries, (\d+) paired", text),
+    ]
+    assert len(counts) == 2
+    assert {(int(q), int(o)) for q, o in counts} == {(len(QUERIES), len(ORACLES))}

@@ -1,12 +1,13 @@
 """tools/: the scripts on disk are the ones README's Layout block
 names, each compiles, and tools/scale.py records seconds, exponents
-and errors."""
+and errors, with each query warmed up untimed first."""
 
 from __future__ import annotations
 
 import json
 import re
 from pathlib import Path
+from types import SimpleNamespace
 
 from tools import scale
 
@@ -44,3 +45,38 @@ def test_scale_records_seconds_exponents_and_errors(spark, sf_dir, tmp_path):
     assert (timed["from"], timed["to"]) == (first["sf_dir"], second["sf_dir"])
     assert all(isinstance(x, float) for x in timed["exponents"].values())
     assert failed["exponents"] == {n: None for n in names}
+
+
+def test_scale_runs_each_query_untimed_before_timing(tmp_path, monkeypatch):
+    """A query's first call is cold (5 s on a fake clock, 1 s after it):
+    the untimed warm-up at the first point takes it, so both points
+    read 1 s and the exponent is 0, not negative."""
+    clock, calls = [0.0], []
+
+    def fake_query(name):
+        def build(spark, sf_dir):
+            def save():
+                clock[0] += 1.0 if any(n == name for n, _ in calls) else 5.0
+                calls.append((name, sf_dir))
+
+            writer = SimpleNamespace(save=save)
+            writer.mode = lambda _: writer
+            return SimpleNamespace(write=SimpleNamespace(format=lambda _: writer))
+
+        return build
+
+    names = ["a", "b"]
+    monkeypatch.setattr(scale, "QUERIES", {n: fake_query(n) for n in names})
+    monkeypatch.setattr(scale, "time", SimpleNamespace(perf_counter=lambda: clock[0]))
+    monkeypatch.setattr(
+        scale, "get_spark",
+        lambda _: SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda _: None)),
+    )
+    out = tmp_path / "scale.json"
+    points = ["/d/sf0.001", "/d/sf0.01"]
+    assert scale.main([str(out), *points]) == 0
+    timed = [(n, p) for p in points for n in names]
+    assert calls == [(n, points[0]) for n in names] + timed
+    record = json.loads(out.read_text())
+    assert [p["results"] for p in record["points"]] == [{"a": 1.0, "b": 1.0}] * 2
+    assert record["pairs"][0]["exponents"] == {"a": 0.0, "b": 0.0}

@@ -40,12 +40,25 @@ def parse_sf(sf_dir: str) -> float | None:
         return None
 
 
+def run_query(spark, sf_dir: str, name: str) -> None:
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+def warm_up(spark, sf_dir: str, names: list[str]) -> None:
+    """Run each query once at sf_dir, untimed; errors show when timed."""
+    for name in names:
+        try:
+            run_query(spark, sf_dir, name)
+        except Exception:  # noqa: BLE001
+            pass
+
+
 def run_point(spark, sf_dir: str, names: list[str]) -> dict:
     results: dict[str, float | str] = {}
     for name in names:
         t0 = time.perf_counter()
         try:
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            run_query(spark, sf_dir, name)
             results[name] = round(time.perf_counter() - t0, 3)
             print(f"OK   {sf_dir} {name} {results[name]}s", flush=True)
         except Exception as e:  # noqa: BLE001
@@ -88,6 +101,7 @@ def main(argv: list[str] | None = None) -> int:
         ap.error(f"unknown queries: {unknown}")
     spark = get_spark("scale")
     spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, args.sf_dirs[0], names)
     points: list[dict] = []
     for sf_dir in args.sf_dirs:
         points.append(run_point(spark, sf_dir, names))

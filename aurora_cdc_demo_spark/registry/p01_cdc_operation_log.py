@@ -12,6 +12,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import cdc_apply
 from ..operators.asof import asof_join
@@ -808,8 +809,12 @@ def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
     return out
 
 
-def read_binlog(spark, sf_dir: str):
-    from ..sources.cdc_datasource import CDCReplayDataSource
+def read_binlog(spark, sf_dir: str, *columns: str):
+    """The sf_dir's binlog through the ``cdc_replay`` Python data
+    source: every CDC_EVENT_SCHEMA column, or only ``columns`` in that
+    order, which are then the only ones the read tasks build and send
+    to the JVM."""
+    from ..sources.cdc_datasource import CDC_EVENT_SCHEMA, CDCReplayDataSource
 
     # Spark checks a new Python data source name against the ACTIVE
     # session's sources but resolves a read against the reading
@@ -825,7 +830,10 @@ def read_binlog(spark, sf_dir: str):
             jsession.setActiveSession(active.get())
         else:
             jsession.clearActiveSession()
-    return spark.read.format("cdc_replay").option("path", binlog_path(sf_dir)).load()
+    reader = spark.read.format("cdc_replay")
+    if columns:
+        reader = reader.schema(StructType([CDC_EVENT_SCHEMA[c] for c in columns]))
+    return reader.option("path", binlog_path(sf_dir)).load()
 
 
 @query(
@@ -842,8 +850,10 @@ def q_cdc_replay_typed(spark, sf_dir):
     flatten_json_df, reference: cdc_500_tables_streaming.py:297-314).
     DELETE events carry no after-image and TRUNCATE events carry no
     row identity at all (table-wide op), so their payload/key columns
-    are NULL — exactly what the oracle derives from the raw table."""
-    raw = read_binlog(spark, sf_dir)
+    are NULL — exactly what the oracle derives from the raw table.
+    The read asks for the 5 columns the flatten uses, so only they
+    cross the Python→JVM boundary."""
+    raw = read_binlog(spark, sf_dir, "primary_keys", "seq", "operation", "after", "ts")
     return raw.select(
         F.col("primary_keys")["key_id"].cast("long").alias("key_id"),
         "seq",

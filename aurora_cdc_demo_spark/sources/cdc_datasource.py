@@ -26,6 +26,16 @@ priority-driven per-table batch selection (reference: lines 350-369):
 each micro-batch serves the highest-priority pending tables only,
 tracked by per-table offsets.
 
+Both readers honour the schema Spark hands them (``reader(schema)``,
+``simpleStreamReader(schema)``): the source's own CDC_EVENT_SCHEMA, or
+a user schema of some of its fields given with ``.schema(...)``. They
+emit exactly that schema's fields, matched by name and in its order,
+because Spark maps a Python source's output to the schema by
+position. Only those columns cross the Python→JVM Arrow boundary: a
+read of 5 of the 22 columns ships 5 (an unrequested map such as
+``before`` is never built). A field outside CDC_EVENT_SCHEMA, or of
+another type, is a ValueError naming it when the reader is built.
+
 Scale note: a large log spreads over up to two partitions per core;
 `batch_size` bounds per-trigger work exactly like the reference's
 `batch_size` option (reference: line 121). The priority reader
@@ -41,6 +51,7 @@ import math
 import os
 from collections.abc import Iterator
 from datetime import datetime, timedelta, timezone
+from operator import itemgetter
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -142,6 +153,39 @@ def _parse_line(line: str) -> tuple:
 
 
 _TABLE_IDX = 1  # position of `table` in the parsed tuple
+_FIELD_IDX = {name: i for i, name in enumerate(CDC_EVENT_SCHEMA.names)}
+
+
+def _field_positions(schema: StructType) -> list[int]:
+    """Positions in CDC_EVENT_SCHEMA of ``schema``'s fields, in
+    ``schema``'s order; a ValueError names the first field that is not
+    in CDC_EVENT_SCHEMA or has another type there. A schema of no
+    fields is a ValueError too: an Arrow batch of no columns carries
+    no row count, so its read would be 0 rows."""
+    if not schema.fields:
+        raise ValueError("cdc_replay: the read schema names no column")
+    for f in schema.fields:
+        if f.name not in _FIELD_IDX:
+            raise ValueError(
+                f"cdc_replay: column {f.name!r} is not in the CDC event schema "
+                f"(columns: {', '.join(CDC_EVENT_SCHEMA.names)})"
+            )
+        expected = CDC_EVENT_SCHEMA[f.name].dataType
+        if f.dataType != expected:
+            raise ValueError(
+                f"cdc_replay: column {f.name!r} must be {expected.simpleString()}, "
+                f"not {f.dataType.simpleString()}"
+            )
+    return [_FIELD_IDX[f.name] for f in schema.fields]
+
+
+def _projector(schema: StructType):
+    """The function from a full event tuple to ``schema``'s fields, in
+    its order: an ``itemgetter``, so a row costs no Python frame (a
+    one-column schema is wrapped to still yield a 1-tuple)."""
+    get = itemgetter(*_field_positions(schema))
+    return get if len(schema.fields) > 1 else lambda row: (get(row),)
+
 
 TRUNCATE_MOD = 251
 TXN_GROUP = 8  # consecutive events per transaction_id
@@ -237,14 +281,18 @@ def _struct_to_map(arr):
     )
 
 
-def _parse_file_arrow(path: str):
-    """Parse one canonical binlog file into a RecordBatch in
-    CDC_EVENT_SCHEMA's Arrow form, or None when the file does not
-    match the canonical writer format (caller falls back to the
-    per-line tuple path)."""
+def _parse_file_arrow(path: str, schema: StructType):
+    """Parse one canonical binlog file into a RecordBatch of
+    ``schema``'s fields (a subset of CDC_EVENT_SCHEMA, any order) in
+    their Arrow form, or None when the file does not match the
+    canonical writer format (caller falls back to the per-line tuple
+    path). The whole file is parsed against the full binlog schema,
+    so the format check does not depend on the fields asked for; only
+    the asked-for columns are then built."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.json as pj
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     try:
         tab = pj.read_json(
@@ -264,42 +312,29 @@ def _parse_file_arrow(path: str):
             col = pc.coalesce(col, tab.column(fallback))
         return col.cast(pa.timestamp("us", tz="UTC"))
 
-    cols = {
-        "database": pc.fill_null(tab.column("database"), "replay"),
-        "table": tab.column("table"),
-        "operation": tab.column("operation"),
-        "ts": ts("ts_us"),
-        "event_time": ts("event_time_us", fallback="ts_us"),
-        "seq": tab.column("seq"),
-        "binlog_file": tab.column("binlog_file"),
-        "binlog_position": tab.column("binlog_position"),
-        "gtid": tab.column("gtid"),
-        "server_id": tab.column("server_id"),
-        "transaction_id": tab.column("transaction_id"),
-        "before": _struct_to_map(tab.column("before")),
-        "after": _struct_to_map(tab.column("after")),
-        "primary_keys": _struct_to_map(tab.column("primary_keys")),
-        "schema_version": tab.column("schema_version"),
-        "ddl_statement": tab.column("ddl_statement"),
-        "processing_time": ts("processing_time_us"),
-        "batch_id": tab.column("batch_id"),
-        "partition_id": tab.column("partition_id"),
-        "is_snapshot": pc.fill_null(tab.column("is_snapshot"), False),
-        "error_flag": pc.fill_null(tab.column("error_flag"), False),
-        "error_message": tab.column("error_message"),
+    # columns that are not a binlog field as is; every other one is
+    derived = {
+        "database": lambda: pc.fill_null(tab.column("database"), "replay"),
+        "ts": lambda: ts("ts_us"),
+        "event_time": lambda: ts("event_time_us", fallback="ts_us"),
+        "processing_time": lambda: ts("processing_time_us"),
+        "is_snapshot": lambda: pc.fill_null(tab.column("is_snapshot"), False),
+        "error_flag": lambda: pc.fill_null(tab.column("error_flag"), False),
+        **{
+            name: (lambda name=name: _struct_to_map(tab.column(name)))
+            for name in _BINLOG_MAP_KEYS
+        },
     }
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = to_arrow_schema(CDC_EVENT_SCHEMA)
+    out = to_arrow_schema(schema)
     arrays = []
-    for f in schema:
-        c = cols[f.name]
+    for f in out:
+        c = derived[f.name]() if f.name in derived else tab.column(f.name)
         if isinstance(c, pa.ChunkedArray):
             c = c.combine_chunks()
         if c.type != f.type:
             c = c.cast(f.type)
         arrays.append(c)
-    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+    return pa.RecordBatch.from_arrays(arrays, schema=out)
 
 
 class _FilePartition(InputPartition):
@@ -343,8 +378,10 @@ def _group_files(files: list[str], sizes: list[int], cpus: int) -> list[list[str
 
 
 class CDCReplayBatchReader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema: StructType = CDC_EVENT_SCHEMA):
         self.path = options["path"]
+        self.schema = schema
+        self.project = _projector(schema)
         # the driver contract's core count; cpu_count is the fallback
         # for sessions launched without it
         self.cpus = int(
@@ -357,23 +394,31 @@ class CDCReplayBatchReader(DataSourceReader):
         return [_FilePartition(g) for g in _group_files(files, sizes, self.cpus)]
 
     def read(self, partition: _FilePartition) -> Iterator:
-        """Emit the file as ONE pyarrow.RecordBatch instead of
+        """Emit each file as ONE pyarrow.RecordBatch instead of
         row-at-a-time tuples: the Python DataSource contract accepts
         RecordBatches directly (plan_data_source_read passes them
         through), so the Python→JVM boundary carries Arrow columns
         rather than a pickled tuple per event — and the parse itself
         runs in pyarrow's C++ JSON reader (no per-line json.loads).
-        Values identical to the row path (tests/test_datasource.py
-        pins them; the stream reader still yields _parse_line tuples,
-        and both derive every field from the same raw record the same
-        way). A file outside the canonical writer format (unexpected
-        fields / types) falls back to the per-line tuple path, so the
-        reader stays general. A directory with no log files plans no
-        partition, and Spark then calls ``read(None)`` once: 0 rows."""
+
+        What crosses the boundary is the reader's schema: exactly its
+        fields, in its order, with its Arrow types. Spark checks a
+        batch only by column count and names and then reads the
+        columns by position, so emitting the source's full schema for
+        a user schema of other order or width would swap or misread
+        columns. Values are identical to the row path
+        (tests/test_datasource.py pins them; the stream reader still
+        yields _parse_line tuples, and both derive every field from
+        the same raw record the same way). A file outside the
+        canonical writer format (unexpected fields / types) falls
+        back to the per-line tuple path, projected to the same
+        fields, so the reader stays general. A directory with no log
+        files plans no partition, and Spark then calls ``read(None)``
+        once: 0 rows."""
         if partition is None:
             return
         for file_path in partition.files:
-            batch = _parse_file_arrow(file_path)
+            batch = _parse_file_arrow(file_path, self.schema)
             if batch is not None:
                 if batch.num_rows:
                     yield batch
@@ -381,7 +426,7 @@ class CDCReplayBatchReader(DataSourceReader):
             with open(file_path) as fh:
                 for line in fh:
                     if line.strip():
-                        yield _parse_line(line)
+                        yield self.project(_parse_line(line))
 
 
 class CDCReplayStreamReader(SimpleDataSourceStreamReader):
@@ -401,10 +446,15 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
       volume + recency) and serves up to ``batch_size`` of THEIR rows
       in log order; other tables' offsets stand still. Exactly-once
       replay is per-table: [start.table_offsets, end.table_offsets).
+
+    Rows are selected and counted per table on the full parsed tuple;
+    ``read`` and ``readBetweenOffsets`` then yield them as tuples of
+    the reader's schema, in its order.
     """
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema: StructType = CDC_EVENT_SCHEMA):
         self.path = options["path"]
+        self.project = _projector(schema)
         self.batch_size = int(options.get("batch_size", "1000"))
         tpb = options.get("tables_per_batch")
         self.tables_per_batch = int(tpb) if tpb is not None else None
@@ -515,7 +565,9 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
             rows, end = self._read_priority(start)
         else:
             rows, end = self._read_range(start, self.batch_size)
-        return iter(rows), end
+        # a list iterator, not a generator: Spark's prefetch cache
+        # copy.copy()s the iterator to serve a batch more than once
+        return iter(list(map(self.project, rows))), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # exactly-once replay on recovery: re-read [start, end)
@@ -528,9 +580,9 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
                 lo, hi = s_off.get(t, 0), e_off.get(t, 0)
                 out.extend(rows[lo:hi])
             out.sort(key=lambda r: r[5])  # global seq order, as read()
-            return iter(out)
-        rows, _ = self._read_range(start, None, end)
-        return iter(rows)
+        else:
+            out, _ = self._read_range(start, None, end)
+        return iter(list(map(self.project, out)))
 
     def commit(self, end: dict) -> None:
         # Checkpoint the committed offset (reference: lines 479-489).
@@ -552,10 +604,10 @@ class CDCReplayDataSource(DataSource):
         return CDC_EVENT_SCHEMA
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        return CDCReplayBatchReader(self.options)
+        return CDCReplayBatchReader(self.options, schema)
 
     def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return CDCReplayStreamReader(self.options)
+        return CDCReplayStreamReader(self.options, schema)
 
 
 # ---------------------------------------------------------------------------

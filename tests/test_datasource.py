@@ -4,21 +4,27 @@ batch read, streaming read with offsets, exactly-once replay."""
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import LongType, MapType, StringType, StructField, StructType
 
 from aurora_cdc_demo_spark.registry import read_binlog
 from aurora_cdc_demo_spark.sources import cdc_datasource
 from aurora_cdc_demo_spark.sources.cdc_datasource import (
     CDC_EVENT_SCHEMA,
     PARTITION_BYTES,
+    CDCReplayBatchReader,
     CDCReplayDataSource,
     CDCReplayStreamReader,
+    _FilePartition,
     _group_files,
+    _log_files,
     write_binlog_from_events,
 )
 
@@ -421,3 +427,182 @@ def test_batch_read_of_a_dir_without_log_files(registered, tmp_path):
     df = registered.read.format("cdc_replay").option("path", str(missing)).load()
     with pytest.raises(Exception, match=rf"FileNotFoundError.*{re.escape(str(missing))}"):
         df.collect()
+
+
+def _schema(*names: str) -> StructType:
+    return StructType([CDC_EVENT_SCHEMA[n] for n in names])
+
+
+def _comparable(df):
+    """The frame with its map columns as JSON text, so set operations
+    and row equality apply to every column."""
+    return df.select(
+        *[
+            F.to_json(f.name).alias(f.name) if isinstance(f.dataType, MapType) else f.name
+            for f in df.schema.fields
+        ]
+    )
+
+
+SUBSET = ("seq", "after", "operation")
+REORDERED = tuple(reversed(CDC_EVENT_SCHEMA.names))
+
+
+@pytest.mark.parametrize("names", [SUBSET, REORDERED], ids=["subset", "reordered"])
+def test_batch_reader_emits_exactly_the_read_schema(binlog_dir, names):
+    """Without Spark: a read task's batches carry exactly the reader's
+    schema, fields in its order with its Arrow types."""
+    path, n = binlog_dir
+    schema = _schema(*names)
+    reader = CDCReplayBatchReader({"path": path}, schema)
+    batches = list(reader.read(_FilePartition(_log_files(path))))
+    assert batches and all(b.schema == to_arrow_schema(schema) for b in batches)
+    assert sum(b.num_rows for b in batches) == n
+
+
+@pytest.mark.parametrize(
+    "names", [SUBSET, REORDERED, ("seq",)], ids=["subset", "reordered", "one_column"]
+)
+def test_tuple_fallback_emits_the_read_schema(tmp_path, binlog_dir, names):
+    """A file outside the canonical format (an extra field) falls back
+    to per-line tuples, each of the schema's arity and order."""
+    path, _ = binlog_dir
+    with open(_log_files(path)[0]) as fh:
+        lines = [json.loads(ln) for ln in fh][:5]
+    (tmp_path / "binlog.000000.jsonl").write_text(
+        "".join(json.dumps({**rec, "extra": 1}) + "\n" for rec in lines)
+    )
+    reader = CDCReplayBatchReader({"path": str(tmp_path)}, _schema(*names))
+    rows = list(reader.read(_FilePartition(_log_files(str(tmp_path)))))
+    full = [cdc_datasource._parse_line(json.dumps(rec)) for rec in lines]
+    idx = [CDC_EVENT_SCHEMA.names.index(c) for c in names]
+    assert rows == [tuple(r[i] for i in idx) for r in full]
+
+
+def test_read_binlog_columns_equal_the_full_reads_select(spark, sf_dir):
+    part = read_binlog(spark, sf_dir, "seq", "after")
+    assert part.columns == ["seq", "after"]
+    full = _comparable(read_binlog(spark, sf_dir).select("seq", "after"))
+    part = _comparable(part)
+    assert part.count() == full.count() > 0
+    assert part.exceptAll(full).count() == 0
+    assert full.exceptAll(part).count() == 0
+
+
+@pytest.mark.parametrize(
+    "names",
+    [
+        [
+            {"gtid": "transaction_id", "transaction_id": "gtid"}.get(c, c)
+            for c in CDC_EVENT_SCHEMA.names
+        ],
+        REORDERED,
+    ],
+    ids=["gtid_transaction_id_swapped", "reversed"],
+)
+def test_user_schema_is_matched_by_name_not_position(registered, binlog_dir, names):
+    """Spark reads a Python source's batch by position: a user schema
+    in another order than the source's must still read each column's
+    own values (swapped string columns read each other's values, and
+    a reversed schema failed on a bool read of a string column)."""
+    path, _ = binlog_dir
+    default = registered.read.format("cdc_replay").option("path", path).load()
+    user = (
+        registered.read.format("cdc_replay")
+        .schema(_schema(*names))
+        .option("path", path)
+        .load()
+    )
+    assert user.columns == list(names)
+    cols = CDC_EVENT_SCHEMA.names
+    want = _comparable(default).select(*cols).orderBy("seq").collect()
+    got = _comparable(user).select(*cols).orderBy("seq").collect()
+    assert len(got) == len(want) > 0
+    for c in cols:
+        assert [r[c] for r in got] == [r[c] for r in want], c
+
+
+@pytest.mark.parametrize(
+    "fields, match",
+    [
+        (
+            [CDC_EVENT_SCHEMA["seq"], StructField("nope", StringType())],
+            r"column 'nope' is not in the CDC event schema",
+        ),
+        (
+            [CDC_EVENT_SCHEMA["seq"], StructField("gtid", LongType())],
+            r"column 'gtid' must be string, not bigint",
+        ),
+        ([], r"the read schema names no column"),
+    ],
+    ids=["unknown_column", "wrong_type", "no_column"],
+)
+def test_bad_user_schema_is_a_named_error(registered, binlog_dir, fields, match):
+    path, _ = binlog_dir
+    schema = StructType(fields)
+    with pytest.raises(Exception, match=rf"ValueError: cdc_replay: {match}"):
+        registered.read.format("cdc_replay").schema(schema).option("path", path).load().collect()
+    for reader in (CDCReplayBatchReader, CDCReplayStreamReader):
+        with pytest.raises(ValueError, match=match):
+            reader({"path": path}, schema)
+
+
+def test_stream_drain_of_a_subset_equals_its_batch_read(registered, binlog_dir):
+    """A stream reader with a subset schema yields the batch read's
+    rows of those columns, and still counts rows per table (the
+    `table` column is not among them)."""
+    path, n = binlog_dir
+    names = ("seq", "primary_keys", "operation")
+    reader = CDCReplayStreamReader({"path": path, "batch_size": "700"}, _schema(*names))
+    offset, drained = reader.initialOffset(), []
+    while True:
+        it, end = reader.read(offset)
+        # Spark's prefetch cache serves a batch from copies of it
+        rows = list(copy.copy(it))
+        assert list(it) == rows
+        if not rows:
+            break
+        assert list(reader.readBetweenOffsets(offset, end)) == rows
+        drained.extend(rows)
+        offset = end
+    assert sum(offset["table_offsets"].values()) == n
+    batch = (
+        registered.read.format("cdc_replay")
+        .schema(_schema(*names))
+        .option("path", path)
+        .load()
+        .collect()
+    )
+    assert sorted(drained) == sorted(tuple(r) for r in batch)
+
+
+def test_spark_stream_of_a_subset_equals_its_batch_read(registered, binlog_dir, tmp_path):
+    """readStream with a subset schema through a real query: Spark
+    hands the schema to simpleStreamReader, and the drained rows equal
+    the batch read of the same columns."""
+    path, n = binlog_dir
+    schema = _schema("seq", "after", "table")
+    q = (
+        registered.readStream.format("cdc_replay")
+        .schema(schema)
+        .option("path", path)
+        .option("batch_size", "700")
+        .load()
+        .writeStream.format("memory")
+        .queryName("cdc_replay_subset")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    streamed = _comparable(registered.table("cdc_replay_subset"))
+    batch = _comparable(
+        registered.read.format("cdc_replay").schema(schema).option("path", path).load()
+    )
+    assert streamed.columns == ["seq", "after", "table"]
+    assert streamed.count() == n
+    assert streamed.exceptAll(batch).count() == 0
+    assert batch.exceptAll(streamed).count() == 0

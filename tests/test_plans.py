@@ -5,6 +5,8 @@ operator collects to the driver."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from aurora_cdc_demo_spark.registry import QUERIES
@@ -66,6 +68,16 @@ def test_no_python_udf_in_hot_paths(spark, sf_dir, name):
     plan = plan_of(spark, sf_dir, name)
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+def test_cdc_replay_typed_scans_only_its_columns(spark, sf_dir):
+    """The Python data source scan of cdc_replay_typed outputs the 5
+    columns its flatten uses, not the source's 22."""
+    plan = plan_of(spark, sf_dir, "cdc_replay_typed")
+    scans = re.findall(r"BatchScan cdc_replay\[([^\]]*)\] \(Python\)", plan)
+    assert len(scans) == 1, plan
+    columns = [re.sub(r"#\d+L?$", "", c.strip()) for c in scans[0].split(",")]
+    assert columns == ["primary_keys", "seq", "operation", "after", "ts"]
 
 
 def test_q8_broadcasts_all_dims_filters_pushed(spark, sf_dir):

@@ -8,6 +8,8 @@ per-task ``importlib.invalidate_caches()`` re-reads no archive.
 from __future__ import annotations
 
 import os
+import shlex
+import subprocess
 import sys
 import zipimport
 from types import SimpleNamespace
@@ -203,3 +205,27 @@ def test_driver_interpreter_unless_the_jvm_is_another_version(tmp_path, monkeypa
     stub = _session_stub(tmp_path)
     use_installed_pyspark(stub)  # the driver's own interpreter
     assert stub.sparkContext.pythonExec == os.path.join(str(tmp_path), "python")
+
+
+def test_pyspark_python_wrapper_environment_reaches_the_worker(tmp_path, monkeypatch):
+    """A PYSPARK_PYTHON wrapper that exports a variable before exec'ing
+    the real interpreter is a deployment setting: the launcher execs
+    the wrapper itself, so what it exports reaches every process."""
+    wrapper = tmp_path / "wrapper python"
+    wrapper.write_text(
+        "#!/bin/sh\n"
+        "AURORA_WRAPPER_MARK=set\nexport AURORA_WRAPPER_MARK\n"
+        f"exec {shlex.quote(sys.executable)} \"$@\"\n"
+    )
+    wrapper.chmod(0o755)
+    monkeypatch.setenv("PYSPARK_PYTHON", str(wrapper))
+    monkeypatch.delenv("AURORA_WRAPPER_MARK", raising=False)
+    stub = _session_stub(tmp_path)
+    use_installed_pyspark(stub)
+    launcher = os.path.join(str(tmp_path), "python")
+    assert stub.sparkContext.pythonExec == launcher
+    seen = subprocess.run(
+        [launcher, "-c", "import os; print(os.environ.get('AURORA_WRAPPER_MARK'))"],
+        capture_output=True, text=True, check=True,
+    )
+    assert seen.stdout.strip() == "set"

@@ -779,6 +779,10 @@ _BINLOG_LOG_CTE = f"""
 """
 
 
+# where binlog_path stages its logs (the package's .cache/)
+BINLOG_CACHE_ROOT = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
+
+
 def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
     """Materialize (once per sf_dir) the deterministic CDC binlog for
     the DataSource-backed queries; cached under .cache/ keyed by a
@@ -786,7 +790,6 @@ def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
     ``include_ddl`` variant (a separate cache dir) carries the
     mid-log DDL event + schema_version 2 payloads."""
     import hashlib
-    import os
 
     from ..sources.cdc_datasource import write_binlog_from_events
 
@@ -797,9 +800,9 @@ def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
     st = os.stat(src)
     ident = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
     tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    cache_root = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
-    variant = "cdc_binlog_ddl_v2" if include_ddl else "cdc_binlog_v2"
-    out = os.path.join(cache_root, f"{variant}_{tag}")
+    # v3: gzip JSON lines (a plain v2 cache is never reused)
+    variant = "cdc_binlog_ddl_v3" if include_ddl else "cdc_binlog_v3"
+    out = os.path.join(BINLOG_CACHE_ROOT, f"{variant}_{tag}")
     marker = os.path.join(out, "_BINLOG_DONE")
     if not os.path.exists(marker):
         write_binlog_from_events(

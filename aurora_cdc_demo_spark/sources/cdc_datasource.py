@@ -8,10 +8,16 @@ binlog position, transaction identity, schema-evolution, performance
 tracking and data-quality fields), the same operation vocabulary
 INSERT/UPDATE/DELETE/TRUNCATE (reference: line 61), and the same
 offset/checkpoint contract (initialOffset/latestOffset-read/commit),
-but the "binlog" is a local JSON-lines directory instead of a MySQL
-socket — deterministic and testable. The reference's JSON offset
+but the "binlog" is a local directory of JSON-lines files instead of a
+MySQL socket — deterministic and testable. The reference's JSON offset
 {binlog_file, binlog_position, table_offsets} (reference: lines 20-41)
 maps to our {"file_idx": i, "row": r, "table_offsets": {...}}.
+
+At rest the log is gzip JSON lines (``binlog.NNNNNN.jsonl.gz``, as
+production binlogs are stored compressed): the staged log compresses
+about 11x, so both replay scans read a tenth of the bytes. Plain
+``.jsonl`` files, hand-written or live-tailed, are read too; every read
+path picks the codec by the file's suffix.
 
 The batch read packs whole log files, in log order, into partitions
 sized by bytes (PARTITION_BYTES of log per read task, at most two per
@@ -46,6 +52,7 @@ downstream of read) stays fully distributed.
 
 from __future__ import annotations
 
+import gzip
 import json
 import math
 import os
@@ -107,10 +114,37 @@ CDC_EVENT_SCHEMA = StructType(
 )
 
 
+# A log file is gzip JSON lines or plain JSON lines, told by its suffix.
+LOG_SUFFIXES = (".jsonl.gz", ".jsonl")
+
+
 def _log_files(path: str) -> list[str]:
     return sorted(
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".jsonl")
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(LOG_SUFFIXES)
     )
+
+
+def _log_lines(path: str) -> list[str]:
+    """The non-blank lines of one log file, read whole and gunzipped
+    when its name ends in ``.gz``."""
+    with open(path, "rb") as fh:
+        data = fh.read()
+    if path.endswith(".gz"):
+        data = gzip.decompress(data)
+    return [ln for ln in data.decode().split("\n") if ln.strip()]
+
+
+def _parse_bytes(path: str) -> int:
+    """The bytes the parse of one log file handles: a plain file's
+    size, or a gzip file's ISIZE trailer (its last 4 bytes, the
+    uncompressed size mod 2**32 of a single-member file, which is what
+    write_binlog_from_events writes)."""
+    size = os.path.getsize(path)
+    if not path.endswith(".gz") or size < 4:
+        return size
+    with open(path, "rb") as fh:
+        fh.seek(size - 4)
+        return int.from_bytes(fh.read(4), "little")
 
 
 def _us_to_ts(us: int | None) -> datetime | None:
@@ -196,7 +230,9 @@ DDL_STATEMENT = f"ALTER TABLE {DDL_TABLE} ADD COLUMN {DDL_COLUMN} VARCHAR"
 
 # ---------------------------------------------------------------------------
 # C++-side parse of the canonical binlog format (batch read path).
-# The JSON-lines format has exactly one producer (write_binlog_from_events),
+# The format is JSON lines, gzip-compressed at rest (pyarrow's reader
+# gunzips a `.gz` path itself; a plain `.jsonl` file parses the same).
+# It has exactly one producer (write_binlog_from_events),
 # whose map payloads draw from a closed key vocabulary; declaring it as an
 # explicit pyarrow.json schema lets the whole file parse in native code.
 # Key order below mirrors the writer's insertion order so map entries come
@@ -353,7 +389,10 @@ class _FilePartition(InputPartition):
 # re-scan (session.use_installed_pyspark). A 32 MB task parses for
 # ~145 ms, a tenth of get_spark's fixed cost; the size stays at 32 MB
 # so a vanilla session's cost stays under about twice the parse.
-# sf0.01 (4.7 MB) reads in one task, sf0.1 (~47 MB) in two.
+# The bytes counted are those the parse handles, the decompressed log
+# (_parse_bytes), not the ~11x smaller gzip bytes on disk: sf0.01
+# (4.7 MB) reads in one task, sf0.1 (~47 MB) in two and sf1 (~470 MB)
+# in eight on 4 cores (the 2 x cpus cap), as with a plain log.
 PARTITION_BYTES = 32 * 1024 * 1024
 
 
@@ -390,7 +429,7 @@ class CDCReplayBatchReader(DataSourceReader):
 
     def partitions(self):
         files = _log_files(self.path)
-        sizes = [os.path.getsize(f) for f in files]
+        sizes = [_parse_bytes(f) for f in files]
         return [_FilePartition(g) for g in _group_files(files, sizes, self.cpus)]
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -423,10 +462,8 @@ class CDCReplayBatchReader(DataSourceReader):
                 if batch.num_rows:
                     yield batch
                 continue
-            with open(file_path) as fh:
-                for line in fh:
-                    if line.strip():
-                        yield self.project(_parse_line(line))
+            for line in _log_lines(file_path):
+                yield self.project(_parse_line(line))
 
 
 class CDCReplayStreamReader(SimpleDataSourceStreamReader):
@@ -458,9 +495,27 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
         self.batch_size = int(options.get("batch_size", "1000"))
         tpb = options.get("tables_per_batch")
         self.tables_per_batch = int(tpb) if tpb is not None else None
+        # path -> ((size, mtime_ns), lines) of files read before
+        self._file_lines: dict[str, tuple[tuple[int, int], list[str]]] = {}
 
     def initialOffset(self) -> dict:
         return {"file_idx": 0, "row": 0, "table_offsets": {}}
+
+    def _lines(self, path: str) -> list[str]:
+        """``_log_lines(path)``, kept so that a micro-batch does not
+        read and gunzip a file again: the sequential mode keeps the file
+        read last (a batch mostly starts in the file the one before it
+        ended in), the priority mode, which reads the whole log on every
+        trigger, keeps every file. A file whose size or mtime changed,
+        such as a growing plain file, is read again."""
+        st = os.stat(path)
+        key = (st.st_size, st.st_mtime_ns)
+        hit = self._file_lines.get(path)
+        if hit is None or hit[0] != key:
+            if self.tables_per_batch is None:
+                self._file_lines.clear()
+            hit = self._file_lines[path] = (key, _log_lines(path))
+        return hit[1]
 
     # -- global sequential mode ------------------------------------
 
@@ -475,8 +530,7 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
         counts = dict(start.get("table_offsets", {}))
         fi, row = start["file_idx"], start["row"]
         while fi < len(files) and (fi, row) < stop:
-            with open(files[fi]) as fh:
-                lines = [ln for ln in fh if ln.strip()]
+            lines = self._lines(files[fi])
             while row < len(lines) and (fi, row) < stop:
                 if limit is not None and len(out) >= limit:
                     return out, {"file_idx": fi, "row": row, "table_offsets": counts}
@@ -493,11 +547,9 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
     def _rows_by_table(self) -> dict[str, list[tuple]]:
         by_table: dict[str, list[tuple]] = {}
         for f in _log_files(self.path):
-            with open(f) as fh:
-                for line in fh:
-                    if line.strip():
-                        parsed = _parse_line(line)
-                        by_table.setdefault(parsed[_TABLE_IDX], []).append(parsed)
+            for line in self._lines(f):
+                parsed = _parse_line(line)
+                by_table.setdefault(parsed[_TABLE_IDX], []).append(parsed)
         return by_table
 
     def _read_priority(self, start: dict) -> tuple[list, dict]:
@@ -641,10 +693,19 @@ def read_binlog_native(spark, path: str):
     path: once the log is landed as files, a 100 TB replay/backfill
     should be a native columnar-speed scan, not a Python parse.
     tests/test_datasource.py pins both paths row-identical; bench.py
-    reports both throughputs."""
+    reports both throughputs.
+
+    The directory is read with a ``pathGlobFilter`` of both log
+    suffixes (Hadoop's codec picks gzip by the ``.gz`` suffix). A glob
+    in the path itself made Spark look for a ``_spark_metadata`` log
+    under the glob and warn with a stack trace on every read."""
     from pyspark.sql import functions as F
 
-    raw = spark.read.schema(_BINLOG_JSON_SCHEMA).json(f"{path}/*.jsonl")
+    raw = (
+        spark.read.schema(_BINLOG_JSON_SCHEMA)
+        .option("pathGlobFilter", "*.{jsonl,jsonl.gz}")
+        .json(path)
+    )
     return raw.select(
         F.coalesce("database", F.lit("replay")).alias("database"),
         "table",
@@ -677,6 +738,9 @@ def read_binlog_native(spark, path: str):
 # Deterministic binlog generator
 # ---------------------------------------------------------------------------
 
+# gzip level of the staged log: the sf0.01 log compresses ~11.6x.
+BINLOG_GZIP_LEVEL = 6
+
 # Every event_id hitting this residue becomes a table-wide TRUNCATE of
 # its routed table (reference op vocabulary: INSERT/UPDATE/DELETE/
 # TRUNCATE, aurora_cdc_datasource_v2.py:61). The rule is expressed on
@@ -689,12 +753,12 @@ def write_binlog_from_events(
     rows_per_file: int = 2500,
     include_ddl: bool = False,
 ) -> int:
-    """Materialize a deterministic CDC 'binlog' (JSON-lines files)
-    from the events table — the local analog of the reference's
-    workload generator (reference: scripts/cdc_data_generator.py),
-    carrying the full 21-column event schema (reference:
-    aurora_cdc_datasource_v2.py:59-89). Returns number of events
-    written (excluding the optional DDL marker).
+    """Materialize a deterministic CDC 'binlog' (gzip JSON-lines
+    files, ``binlog.NNNNNN.jsonl.gz``) from the events table — the
+    local analog of the reference's workload generator (reference:
+    scripts/cdc_data_generator.py), carrying the full 21-column event
+    schema (reference: aurora_cdc_datasource_v2.py:59-89). Returns
+    number of events written (excluding the optional DDL marker).
 
     Deterministic derivations (all re-expressible in oracle SQL):
       table          users_{user_id % 4}
@@ -712,6 +776,12 @@ def write_binlog_from_events(
     new column in `after` under schema_version 2 (reference reserves
     schema_version/ddl_statement exactly for this,
     aurora_cdc_datasource_v2.py:76-78).
+
+    Each file is written with gzip at level BINLOG_GZIP_LEVEL and a
+    zero header mtime, so the same events give the same bytes. The
+    records' ``binlog_file`` stays the logical name
+    ``binlog.NNNNNN.jsonl``. The readers take plain ``.jsonl`` files
+    as well.
     """
     import pyarrow.parquet as pq
 
@@ -733,13 +803,22 @@ def write_binlog_from_events(
     value = table.column("value").to_pylist()
     ddl_at = n // 2 if include_ddl else None
     fh = None
+
+    def write(rec: dict) -> None:
+        fh.write((json.dumps(rec) + "\n").encode())
+
     for i in range(n):
         file_idx = i // rows_per_file
         binlog_file = f"binlog.{file_idx:06d}.jsonl"
         if i % rows_per_file == 0:
             if fh:
                 fh.close()
-            fh = open(os.path.join(out_dir, binlog_file), "w")
+            fh = gzip.GzipFile(
+                os.path.join(out_dir, binlog_file + ".gz"),
+                "wb",
+                compresslevel=BINLOG_GZIP_LEVEL,
+                mtime=0,
+            )
         ts_us = ts_ns[i] // 1000
         tbl = f"users_{uid[i] % 4}"
         common = {
@@ -758,20 +837,17 @@ def write_binlog_from_events(
             # out-of-band schema-change event: no data payload, seq
             # outside the event_id range so dedup identities never
             # collide; consumers key on ddl_statement/schema_version
-            fh.write(
-                json.dumps(
-                    {
-                        **common,
-                        "table": DDL_TABLE,
-                        "operation": "DDL",
-                        "seq": 1_000_000_000 + i,
-                        "gtid": f"srv2:ddl{i}",
-                        "transaction_id": f"txnddl{i}",
-                        "schema_version": "2",
-                        "ddl_statement": DDL_STATEMENT,
-                    }
-                )
-                + "\n"
+            write(
+                {
+                    **common,
+                    "table": DDL_TABLE,
+                    "operation": "DDL",
+                    "seq": 1_000_000_000 + i,
+                    "gtid": f"srv2:ddl{i}",
+                    "transaction_id": f"txnddl{i}",
+                    "schema_version": "2",
+                    "ddl_statement": DDL_STATEMENT,
+                }
             )
         if eid[i] % TRUNCATE_MOD == TRUNCATE_MOD - 1:
             op = "TRUNCATE"
@@ -805,7 +881,7 @@ def write_binlog_from_events(
         }
         if include_ddl and i > ddl_at and tbl == DDL_TABLE and op != "TRUNCATE":
             rec["schema_version"] = "2"
-        fh.write(json.dumps(rec) + "\n")
+        write(rec)
     if fh:
         fh.close()
     return n

@@ -5,16 +5,20 @@ batch read, streaming read with offsets, exactly-once replay."""
 from __future__ import annotations
 
 import copy
+import gzip
 import json
 import os
 import re
+import shutil
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, MapType, StringType, StructField, StructType
 
-from aurora_cdc_demo_spark.registry import read_binlog
+from aurora_cdc_demo_spark.registry import binlog_path, read_binlog
+from aurora_cdc_demo_spark.registry import p01_cdc_operation_log
 from aurora_cdc_demo_spark.sources import cdc_datasource
 from aurora_cdc_demo_spark.sources.cdc_datasource import (
     CDC_EVENT_SCHEMA,
@@ -25,6 +29,8 @@ from aurora_cdc_demo_spark.sources.cdc_datasource import (
     _FilePartition,
     _group_files,
     _log_files,
+    _log_lines,
+    read_binlog_native,
     write_binlog_from_events,
 )
 
@@ -467,8 +473,7 @@ def test_tuple_fallback_emits_the_read_schema(tmp_path, binlog_dir, names):
     """A file outside the canonical format (an extra field) falls back
     to per-line tuples, each of the schema's arity and order."""
     path, _ = binlog_dir
-    with open(_log_files(path)[0]) as fh:
-        lines = [json.loads(ln) for ln in fh][:5]
+    lines = [json.loads(ln) for ln in _log_lines(_log_files(path)[0])][:5]
     (tmp_path / "binlog.000000.jsonl").write_text(
         "".join(json.dumps({**rec, "extra": 1}) + "\n" for rec in lines)
     )
@@ -606,3 +611,169 @@ def test_spark_stream_of_a_subset_equals_its_batch_read(registered, binlog_dir, 
     assert streamed.count() == n
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
+
+
+# -- the at-rest encoding: gzip JSON lines, plain JSON lines still read
+
+NOT_LOG_FILES = ("_BINLOG_DONE", "_committed_offset.json", "_committed_offset.json.tmp")
+
+
+@pytest.fixture(scope="module")
+def encodings(tmp_path_factory, binlog_dir):
+    """The same log twice, as the writer's gzip files and as plain
+    JSON lines, each next to the files a log dir also holds (the
+    cache marker and the stream's committed-offset marker)."""
+    src, n = binlog_dir
+    gz = tmp_path_factory.mktemp("log_gz")
+    plain = tmp_path_factory.mktemp("log_plain")
+    for f in _log_files(src):
+        name = os.path.basename(f)
+        assert name.endswith(".jsonl.gz")
+        shutil.copy(f, gz / name)
+        with open(f, "rb") as fh:
+            (plain / name.removesuffix(".gz")).write_bytes(gzip.decompress(fh.read()))
+    for d in (gz, plain):
+        for name in NOT_LOG_FILES:
+            (d / name).write_text('{"file_idx": 0, "row": 0, "table_offsets": {}}\n')
+    return str(plain), str(gz), n
+
+
+def _drain(path: str, **options) -> list:
+    """(start, end, rows, replayed rows) of every micro-batch of a
+    full stream drain."""
+    reader = CDCReplayStreamReader({"path": path, "batch_size": "700", **options})
+    start, out = reader.initialOffset(), []
+    while True:
+        it, end = reader.read(start)
+        rows = list(it)
+        if not rows:
+            return out
+        out.append((start, end, rows, list(reader.readBetweenOffsets(start, end))))
+        start = end
+
+
+def test_both_encodings_give_the_same_arrow_batches(encodings):
+    plain, gz, n = encodings
+    tables = []
+    for path in (plain, gz):
+        reader = CDCReplayBatchReader({"path": path})
+        batches = list(reader.read(_FilePartition(_log_files(path))))
+        assert all(isinstance(b, pa.RecordBatch) for b in batches)
+        tables.append(pa.Table.from_batches(batches))
+    assert tables[0].num_rows == n
+    assert tables[0].equals(tables[1])
+
+
+def test_both_encodings_give_the_same_tuple_fallback_rows(encodings, monkeypatch):
+    plain, gz, n = encodings
+    monkeypatch.setattr(cdc_datasource, "_parse_file_arrow", lambda path, schema: None)
+    rows = [
+        list(CDCReplayBatchReader({"path": p}).read(_FilePartition(_log_files(p))))
+        for p in (plain, gz)
+    ]
+    assert len(rows[0]) == n
+    assert rows[0] == rows[1]
+
+
+@pytest.mark.parametrize("options", [{}, {"tables_per_batch": "2"}], ids=["sequential", "priority"])
+def test_both_encodings_give_the_same_stream(encodings, options):
+    """read and readBetweenOffsets yield the same rows at the same
+    offsets from either encoding, and a replay is the batch read."""
+    plain, gz, n = encodings
+    drains = [_drain(p, **options) for p in (plain, gz)]
+    assert sum(len(rows) for _, _, rows, _ in drains[0]) == n
+    assert drains[0] == drains[1]
+    assert all(rows == replayed for _, _, rows, replayed in drains[1])
+
+
+def test_both_encodings_read_the_same_on_both_engines(registered, encodings):
+    """The Python source and the JVM JSON scan read only the log files
+    of a dir that also holds the markers, and both encodings give the
+    same rows on each engine."""
+    plain, gz, n = encodings
+    reads = [
+        _comparable(df)
+        for p in (plain, gz)
+        for df in (
+            registered.read.format("cdc_replay").option("path", p).load(),
+            read_binlog_native(registered, p),
+        )
+    ]
+    want = reads[0]
+    assert want.count() == n
+    for got in reads[1:]:
+        assert got.count() == n
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+
+
+def test_partitions_pack_by_parse_bytes_not_gzip_bytes(encodings, monkeypatch):
+    """A gzip log is grouped by its decompressed bytes (the gzip ISIZE
+    trailer), so it gets the same read tasks as its plain copy; by the
+    ~11x smaller bytes on disk it would get fewer."""
+    plain, gz, _ = encodings
+    total = sum(os.path.getsize(f) for f in _log_files(plain))
+    monkeypatch.setattr(cdc_datasource, "PARTITION_BYTES", total // 3 + 1)
+
+    def groups(path):
+        reader = CDCReplayBatchReader({"path": path})
+        reader.cpus = 4
+        return [
+            [os.path.basename(f).removesuffix(".gz") for f in part.files]
+            for part in reader.partitions()
+        ]
+
+    assert len(groups(plain)) == 3
+    assert groups(gz) == groups(plain)
+
+
+@pytest.mark.parametrize("include_ddl", [False, True], ids=["log", "ddl_log"])
+def test_binlog_cache_is_gzip_and_skips_a_plain_v2_cache(sf_dir, tmp_path, monkeypatch, include_ddl):
+    """binlog_path writes only gzip log files, at under a fifth of the
+    text they hold, and does not return a plain cache of the previous
+    version even when that one is complete."""
+    monkeypatch.setattr(p01_cdc_operation_log, "BINLOG_CACHE_ROOT", str(tmp_path))
+
+    def logs_of(path):
+        names = sorted(set(os.listdir(path)) - {"_BINLOG_DONE"})
+        assert names and all(n.endswith(".jsonl.gz") for n in names)
+        return [os.path.join(path, n) for n in names]
+
+    path = binlog_path(sf_dir, include_ddl=include_ddl)
+    on_disk = text = 0
+    for f in logs_of(path):
+        with open(f, "rb") as fh:
+            data = fh.read()
+        on_disk += len(data)
+        text += len(gzip.decompress(data))
+    assert on_disk * 5 < text
+
+    shutil.rmtree(path)
+    stale = tmp_path / os.path.basename(path).replace("_v3_", "_v2_")
+    stale.mkdir()
+    (stale / "binlog.000000.jsonl").write_text("{}\n")
+    (stale / "_BINLOG_DONE").touch()
+    again = binlog_path(sf_dir, include_ddl=include_ddl)
+    assert again == path != str(stale)
+    assert len(logs_of(again)) == len(_log_files(again))
+
+
+def test_stream_reads_rows_appended_to_a_plain_file(binlog_dir, tmp_path):
+    """A live plain log grows between micro-batches: the rows appended
+    to the file a batch stopped in are read by the next batch."""
+    path, _ = binlog_dir
+    lines = _log_lines(_log_files(path)[0])[:8]
+    log = tmp_path / "binlog.000000.jsonl"
+    log.write_text("\n".join(lines[:5]) + "\n")
+    reader = CDCReplayStreamReader({"path": str(tmp_path), "batch_size": "3"})
+    first, offset = reader.read(reader.initialOffset())
+    with open(log, "a") as fh:
+        fh.write("\n".join(lines[5:]) + "\n")
+    rows = list(first)
+    while True:
+        it, offset = reader.read(offset)
+        batch = list(it)
+        if not batch:
+            break
+        rows.extend(batch)
+    assert rows == [cdc_datasource._parse_line(ln) for ln in lines]

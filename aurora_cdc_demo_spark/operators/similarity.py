@@ -1793,10 +1793,6 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run(spark, sf_dir, pq_codes_sql("spark"))
 
 
-def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run(spark, sf_dir, pq_topk_sql("spark"))
-
-
 PQ_SHORTLIST = TOPK * 10  # ADC candidates fed to the exact re-rank
 
 
@@ -1916,10 +1912,6 @@ def pq_rerank_serve_sql(v_table: str, codes_table: str) -> str:
     return f"""
         WITH {_pq_lut_ctes(v_table, 'spark')}
         , {_pq_rerank_tail(codes_table, v_table, 'spark')}"""
-
-
-def pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run(spark, sf_dir, pq_rerank_topk_sql("spark"))
 
 
 # ---------------------------------------------------------------------------
@@ -2372,42 +2364,6 @@ def label_prop_iter_sql(edges_view: str, nodes_view: str) -> str:
     """
 
 
-def _materialized_uedges(
-    spark: SparkSession,
-    sf_dir: str,
-    n_seeds: int | None,
-    checkpoint_mode: str,
-) -> None:
-    """Build + checkpoint the undirected KNN edge list, register it
-    as view ``knn_uedges_mat``. checkpoint_mode: 'local' (single
-    node) | 'reliable' (cluster; needs a checkpoint dir) — the same
-    split as connected_components/pagerank_knn."""
-    from ..tables import load_table
-
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
-    e = _edges_df(spark, sf_dir, n_seeds)
-    edges = e.union(e.selectExpr("dst AS src", "src AS dst")).distinct()
-    if checkpoint_mode == "reliable":
-        edges = edges.checkpoint(eager=True)
-    elif checkpoint_mode == "local":
-        edges = edges.localCheckpoint()
-    else:
-        raise ValueError(f"unknown checkpoint_mode: {checkpoint_mode!r}")
-    edges.createOrReplaceTempView("knn_uedges_mat")
-
-
-def label_prop(
-    spark: SparkSession,
-    sf_dir: str,
-    n_seeds: int | None = None,
-    checkpoint_mode: str = "local",
-) -> DataFrame:
-    _materialized_uedges(spark, sf_dir, n_seeds, checkpoint_mode)
-    return spark.sql(label_prop_iter_sql("knn_uedges_mat", "embeddings"))
-
-
 def triangle_sql(dialect: str, n_seeds: int | None = None) -> str:
     """Triangle count + clustering coefficient per node over the
     undirected KNN graph. DEGREE-ORDERED orientation (the
@@ -2481,16 +2437,6 @@ def triangle_iter_sql(edges_view: str) -> str:
     """
 
 
-def triangle_knn(
-    spark: SparkSession,
-    sf_dir: str,
-    n_seeds: int | None = None,
-    checkpoint_mode: str = "local",
-) -> DataFrame:
-    _materialized_uedges(spark, sf_dir, n_seeds, checkpoint_mode)
-    return spark.sql(triangle_iter_sql("knn_uedges_mat"))
-
-
 # ---------------------------------------------------------------------------
 # Link prediction on the KNN graph: common-neighbor Jaccard for
 # NON-adjacent pairs — the "suggest merge" review list a curation
@@ -2558,16 +2504,6 @@ def link_pred_iter_sql(edges_view: str) -> str:
         WITH _dummy AS (SELECT 1)
         {_link_pred_body(edges_view, "div")}
     """
-
-
-def link_pred_knn(
-    spark: SparkSession,
-    sf_dir: str,
-    n_seeds: int | None = None,
-    checkpoint_mode: str = "local",
-) -> DataFrame:
-    _materialized_uedges(spark, sf_dir, n_seeds, checkpoint_mode)
-    return spark.sql(link_pred_iter_sql("knn_uedges_mat"))
 
 
 # ---------------------------------------------------------------------------
@@ -3247,22 +3183,6 @@ def pagerank_convergence_sql(dialect: str, edges_view: str | None = None,
     """
 
 
-def pagerank_convergence(
-    spark: SparkSession, sf_dir: str, n_seeds: int | None = None,
-    edges_view: str | None = None,
-) -> DataFrame:
-    from ..tables import load_table
-
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
-    if edges_view is None:
-        edges = _edges_df(spark, sf_dir, n_seeds).localCheckpoint()
-        edges.createOrReplaceTempView("knn_edges_conv_mat")
-        edges_view = "knn_edges_conv_mat"
-    return spark.sql(pagerank_convergence_sql("spark", edges_view))
-
-
 def quant_distortion_sql(dialect: str) -> str:
     """Squared-L2 reconstruction distortion of the two sketch-side
     quantizers on the SAME normalized vectors — the cause-side
@@ -3913,26 +3833,6 @@ def hits_sql(dialect: str, n_seeds: int | None = None) -> str:
                    CAST({HITS_SCALE} {div} n_nodes AS BIGINT) AS s
             FROM nodes CROSS JOIN nn)"""
     return head + _hits_rounds(div, "edges") + _HITS_SELECT
-
-
-def hits_iter_sql(edges_view: str, nodes_view: str) -> str:
-    """Spark-side HITS over an ALREADY-MATERIALIZED edge relation —
-    the pagerank_iter_sql pattern: every round scans the cached edge
-    blocks instead of re-deriving the KNN cell self-join."""
-    head = f"""
-        WITH nodes AS (SELECT vec_id FROM {nodes_view})
-        , nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM nodes)
-        , outdeg AS (
-            SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
-            FROM {edges_view} GROUP BY src)
-        , indeg AS (
-            SELECT dst, CAST(COUNT(*) AS BIGINT) AS deg
-            FROM {edges_view} GROUP BY dst)
-        , h0 AS (
-            SELECT vec_id,
-                   CAST({HITS_SCALE} div n_nodes AS BIGINT) AS s
-            FROM nodes CROSS JOIN nn)"""
-    return head + _hits_rounds("div", edges_view) + _HITS_SELECT
 
 
 def _hits_half_sql(edges: str, nodes: str, prev_view: str,

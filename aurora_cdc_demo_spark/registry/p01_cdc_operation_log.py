@@ -7,6 +7,8 @@ gate). Column names/types are aligned on both sides.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 import threading
 from collections.abc import Callable
 
@@ -781,6 +783,22 @@ _BINLOG_LOG_CTE = f"""
 
 # where binlog_path stages its logs (the package's .cache/)
 BINLOG_CACHE_ROOT = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
+# the binlog generator's version: v3 is gzip JSON lines (a plain v2
+# cache is never reused)
+BINLOG_VERSION = 3
+_BINLOG_CACHE_DIR = re.compile(r"cdc_binlog(?:_ddl)?_v(\d+)_")
+
+
+def _drop_stale_binlogs() -> None:
+    """Delete the caches of earlier generator versions,
+    ``cdc_binlog[_ddl]_v<N>_*`` with N below BINLOG_VERSION, and only
+    those: a current-version cache of another sf_dir is in use."""
+    if not os.path.isdir(BINLOG_CACHE_ROOT):
+        return
+    for name in os.listdir(BINLOG_CACHE_ROOT):
+        m = _BINLOG_CACHE_DIR.match(name)
+        if m and int(m.group(1)) < BINLOG_VERSION:
+            shutil.rmtree(os.path.join(BINLOG_CACHE_ROOT, name), ignore_errors=True)
 
 
 def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
@@ -800,11 +818,11 @@ def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
     st = os.stat(src)
     ident = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
     tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    # v3: gzip JSON lines (a plain v2 cache is never reused)
-    variant = "cdc_binlog_ddl_v3" if include_ddl else "cdc_binlog_v3"
-    out = os.path.join(BINLOG_CACHE_ROOT, f"{variant}_{tag}")
+    variant = "cdc_binlog_ddl" if include_ddl else "cdc_binlog"
+    out = os.path.join(BINLOG_CACHE_ROOT, f"{variant}_v{BINLOG_VERSION}_{tag}")
     marker = os.path.join(out, "_BINLOG_DONE")
     if not os.path.exists(marker):
+        _drop_stale_binlogs()
         write_binlog_from_events(
             f"{sf_dir}/events.parquet", out, include_ddl=include_ddl
         )

@@ -662,8 +662,7 @@ def _knn_edges_view(spark, sf_dir) -> str:
 
 def _knn_uedges_view(spark, sf_dir) -> str:
     """The undirected twin (src/dst unioned with the swap, UNION-
-    deduped exactly like operators/similarity._materialized_uedges),
-    derived FROM the shared directed gate map and itself gate-mapped
+    deduped), derived FROM the shared directed gate map and itself gate-mapped
     — reciprocal-pair dedup runs once per session."""
     edges = _knn_edges_view(spark, sf_dir)
     _gate_map(

@@ -19,18 +19,20 @@ about 11x, so both replay scans read a tenth of the bytes. Plain
 ``.jsonl`` files, hand-written or live-tailed, are read too; every read
 path picks the codec by the file's suffix.
 
-The batch read packs whole log files, in log order, into partitions
-sized by bytes (PARTITION_BYTES of log per read task, at most two per
-core), since every Python task pays a fixed cost that a small log's
-parse does not cover: ~16 ms of CPU and ~5 KB of reads under
-``session.get_spark``, ~280 ms and ~2.6 MB in a session whose workers
-import Spark's pyspark.zip. The stream reader is a
-SimpleDataSourceStreamReader emitting bounded micro-batches with
-exactly-once replay via readBetweenOffsets. With the
-``tables_per_batch`` option the reader switches to the reference's
-priority-driven per-table batch selection (reference: lines 350-369):
-each micro-batch serves the highest-priority pending tables only,
-tracked by per-table offsets.
+Every reader turns a log file into events one way, ``_parse_file``,
+and emits pyarrow.RecordBatches, which Spark passes to the JVM as they
+are. The batch read packs whole log files, in log order, into
+partitions sized by bytes (PARTITION_BYTES of log per read task, at
+most two per core), since every Python task pays a fixed cost that a
+small log's parse does not cover: ~16 ms of CPU and ~5 KB of reads
+under ``session.get_spark``, ~280 ms and ~2.6 MB in a session whose
+workers import Spark's pyspark.zip. The stream reader is a
+SimpleDataSourceStreamReader emitting bounded micro-batches, slices of
+each file's parsed batch, with exactly-once replay via
+readBetweenOffsets. With the ``tables_per_batch`` option the reader
+switches to the reference's priority-driven per-table batch selection
+(reference: lines 350-369): each micro-batch serves the highest-
+priority pending tables only, tracked by per-table offsets.
 
 Both readers honour the schema Spark hands them (``reader(schema)``,
 ``simpleStreamReader(schema)``): the source's own CDC_EVENT_SCHEMA, or
@@ -57,8 +59,6 @@ import json
 import math
 import os
 from collections.abc import Iterator
-from datetime import datetime, timedelta, timezone
-from operator import itemgetter
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -147,59 +147,16 @@ def _parse_bytes(path: str) -> int:
         return int.from_bytes(fh.read(4), "little")
 
 
-def _us_to_ts(us: int | None) -> datetime | None:
-    if us is None:
-        return None
-    # integer split keeps exact microseconds (float seconds would
-    # lose precision at 2024-era epochs)
-    return datetime.fromtimestamp(us // 1_000_000, tz=timezone.utc).replace(
-        tzinfo=None
-    ) + timedelta(microseconds=us % 1_000_000)
-
-
-def _parse_line(line: str) -> tuple:
-    rec = json.loads(line)
-    ts = _us_to_ts(rec["ts_us"])
-    return (
-        rec.get("database", "replay"),
-        rec["table"],
-        rec["operation"],
-        ts,
-        _us_to_ts(rec.get("event_time_us", rec["ts_us"])),
-        rec["seq"],
-        rec.get("binlog_file"),
-        rec.get("binlog_position"),
-        rec.get("gtid"),
-        rec.get("server_id"),
-        rec.get("transaction_id"),
-        rec.get("before"),
-        rec.get("after"),
-        rec.get("primary_keys"),
-        rec.get("schema_version"),
-        rec.get("ddl_statement"),
-        _us_to_ts(rec.get("processing_time_us")),
-        rec.get("batch_id"),
-        rec.get("partition_id"),
-        rec.get("is_snapshot", False),
-        rec.get("error_flag", False),
-        rec.get("error_message"),
-    )
-
-
-_TABLE_IDX = 1  # position of `table` in the parsed tuple
-_FIELD_IDX = {name: i for i, name in enumerate(CDC_EVENT_SCHEMA.names)}
-
-
-def _field_positions(schema: StructType) -> list[int]:
-    """Positions in CDC_EVENT_SCHEMA of ``schema``'s fields, in
-    ``schema``'s order; a ValueError names the first field that is not
-    in CDC_EVENT_SCHEMA or has another type there. A schema of no
-    fields is a ValueError too: an Arrow batch of no columns carries
-    no row count, so its read would be 0 rows."""
+def _check_schema(schema: StructType) -> StructType:
+    """``schema`` itself, once each of its fields is checked: a
+    ValueError names the first field that is not in CDC_EVENT_SCHEMA
+    or has another type there. A schema of no fields is a ValueError
+    too: an Arrow batch of no columns carries no row count, so its
+    read would be 0 rows."""
     if not schema.fields:
         raise ValueError("cdc_replay: the read schema names no column")
     for f in schema.fields:
-        if f.name not in _FIELD_IDX:
+        if f.name not in CDC_EVENT_SCHEMA.names:
             raise ValueError(
                 f"cdc_replay: column {f.name!r} is not in the CDC event schema "
                 f"(columns: {', '.join(CDC_EVENT_SCHEMA.names)})"
@@ -210,15 +167,7 @@ def _field_positions(schema: StructType) -> list[int]:
                 f"cdc_replay: column {f.name!r} must be {expected.simpleString()}, "
                 f"not {f.dataType.simpleString()}"
             )
-    return [_FIELD_IDX[f.name] for f in schema.fields]
-
-
-def _projector(schema: StructType):
-    """The function from a full event tuple to ``schema``'s fields, in
-    its order: an ``itemgetter``, so a row costs no Python frame (a
-    one-column schema is wrapped to still yield a 1-tuple)."""
-    get = itemgetter(*_field_positions(schema))
-    return get if len(schema.fields) > 1 else lambda row: (get(row),)
+    return schema
 
 
 TRUNCATE_MOD = 251
@@ -229,14 +178,14 @@ DDL_COLUMN = "loyalty_tier"
 DDL_STATEMENT = f"ALTER TABLE {DDL_TABLE} ADD COLUMN {DDL_COLUMN} VARCHAR"
 
 # ---------------------------------------------------------------------------
-# C++-side parse of the canonical binlog format (batch read path).
-# The format is JSON lines, gzip-compressed at rest (pyarrow's reader
-# gunzips a `.gz` path itself; a plain `.jsonl` file parses the same).
-# It has exactly one producer (write_binlog_from_events),
-# whose map payloads draw from a closed key vocabulary; declaring it as an
-# explicit pyarrow.json schema lets the whole file parse in native code.
-# Key order below mirrors the writer's insertion order so map entries come
-# out identical to the per-line path.
+# The parse of one log file.
+# The canonical format is JSON lines, gzip-compressed at rest (pyarrow's
+# reader gunzips a `.gz` path itself; a plain `.jsonl` file parses the
+# same). It has exactly one producer (write_binlog_from_events), whose
+# map payloads draw from a closed key vocabulary; declaring them as
+# structs lets the whole file parse in native code. Key order below
+# mirrors the writer's insertion order, so the maps built from the
+# structs keep the record's key order, as a per-line json.loads does.
 
 _BINLOG_MAP_KEYS = {
     "before": ("value", "event_type", DDL_COLUMN),
@@ -244,8 +193,15 @@ _BINLOG_MAP_KEYS = {
     "primary_keys": ("key_id",),
 }
 
+# fields every record carries; a record without one is a ValueError
+_REQUIRED_FIELDS = ("table", "operation", "seq", "ts_us")
 
-def _binlog_arrow_schema():
+
+def _binlog_arrow_schema(maps: bool = False):
+    """The raw record format of the log: microsecond epoch ints for the
+    time fields, and the payloads as structs of their closed key
+    vocabulary or, with ``maps``, as map<string,string> (the fallback
+    parse and the JVM scan, which take any keys)."""
     import pyarrow as pa
 
     fields = [
@@ -270,9 +226,12 @@ def _binlog_arrow_schema():
         pa.field("error_message", pa.string()),
     ]
     for name, keys in _BINLOG_MAP_KEYS.items():
-        fields.append(
-            pa.field(name, pa.struct([pa.field(k, pa.string()) for k in keys]))
+        payload = (
+            pa.map_(pa.string(), pa.string())
+            if maps
+            else pa.struct([pa.field(k, pa.string()) for k in keys])
         )
+        fields.append(pa.field(name, payload))
     return pa.schema(fields)
 
 
@@ -280,12 +239,14 @@ def _struct_to_map(arr):
     """struct<k1..kn: string> → map<string,string>: one entry per
     non-null field, in declared (= writer insertion) order; a null
     struct row becomes a null map (the null-offset contract of
-    MapArray.from_arrays)."""
+    MapArray.from_arrays). A map column is returned as it is."""
     import numpy as np
 
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    if pa.types.is_map(arr.type):
+        return arr
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
@@ -317,14 +278,17 @@ def _struct_to_map(arr):
     )
 
 
-def _parse_file_arrow(path: str, schema: StructType):
-    """Parse one canonical binlog file into a RecordBatch of
-    ``schema``'s fields (a subset of CDC_EVENT_SCHEMA, any order) in
-    their Arrow form, or None when the file does not match the
-    canonical writer format (caller falls back to the per-line tuple
-    path). The whole file is parsed against the full binlog schema,
-    so the format check does not depend on the fields asked for; only
-    the asked-for columns are then built."""
+def _parse_file(path: str, schema: StructType):
+    """Parse one log file into a RecordBatch of ``schema``'s fields (a
+    subset of CDC_EVENT_SCHEMA, any order) in their Arrow form. A file
+    in the canonical format parses whole in pyarrow's C++ JSON reader;
+    any other (an unknown field, another type) is json.loads'ed line
+    by line into the raw schema with map payloads. Both skip blank
+    lines, so a record's row is its index among the non-blank lines.
+    The whole file is decoded against the full raw schema, so the
+    decode does not depend on the fields asked for; only the
+    asked-for columns are then built. A record without one of
+    _REQUIRED_FIELDS is a ValueError naming the file and the field."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.json as pj
@@ -340,7 +304,14 @@ def _parse_file_arrow(path: str, schema: StructType):
             read_options=pj.ReadOptions(use_threads=False),
         )
     except pa.ArrowInvalid:
-        return None
+        tab = pa.Table.from_pylist(
+            [json.loads(ln) for ln in _log_lines(path)],
+            schema=_binlog_arrow_schema(maps=True),
+        )
+    for name in _REQUIRED_FIELDS:
+        if tab.column(name).null_count:
+            row = tab.column(name).to_pylist().index(None)
+            raise ValueError(f"cdc_replay: record {row} of {path} has no {name!r}")
 
     def ts(name, fallback=None):
         col = tab.column(name)
@@ -419,8 +390,7 @@ def _group_files(files: list[str], sizes: list[int], cpus: int) -> list[list[str
 class CDCReplayBatchReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType = CDC_EVENT_SCHEMA):
         self.path = options["path"]
-        self.schema = schema
-        self.project = _projector(schema)
+        self.schema = _check_schema(schema)
         # the driver contract's core count; cpu_count is the fallback
         # for sessions launched without it
         self.cpus = int(
@@ -433,45 +403,46 @@ class CDCReplayBatchReader(DataSourceReader):
         return [_FilePartition(g) for g in _group_files(files, sizes, self.cpus)]
 
     def read(self, partition: _FilePartition) -> Iterator:
-        """Emit each file as ONE pyarrow.RecordBatch instead of
-        row-at-a-time tuples: the Python DataSource contract accepts
-        RecordBatches directly (plan_data_source_read passes them
-        through), so the Python→JVM boundary carries Arrow columns
-        rather than a pickled tuple per event — and the parse itself
-        runs in pyarrow's C++ JSON reader (no per-line json.loads).
+        """Emit each file as ONE pyarrow.RecordBatch: the Python
+        DataSource contract accepts RecordBatches directly
+        (plan_data_source_read passes them through), so the Python→JVM
+        boundary carries Arrow columns rather than a pickled tuple per
+        event.
 
         What crosses the boundary is the reader's schema: exactly its
         fields, in its order, with its Arrow types. Spark checks a
         batch only by column count and names and then reads the
         columns by position, so emitting the source's full schema for
         a user schema of other order or width would swap or misread
-        columns. Values are identical to the row path
-        (tests/test_datasource.py pins them; the stream reader still
-        yields _parse_line tuples, and both derive every field from
-        the same raw record the same way). A file outside the
-        canonical writer format (unexpected fields / types) falls
-        back to the per-line tuple path, projected to the same
-        fields, so the reader stays general. A directory with no log
-        files plans no partition, and Spark then calls ``read(None)``
-        once: 0 rows."""
+        columns. A file with no records yields nothing. A directory
+        with no log files plans no partition, and Spark then calls
+        ``read(None)`` once: 0 rows."""
         if partition is None:
             return
         for file_path in partition.files:
-            batch = _parse_file_arrow(file_path, self.schema)
-            if batch is not None:
-                if batch.num_rows:
-                    yield batch
-                continue
-            for line in _log_lines(file_path):
-                yield self.project(_parse_line(line))
+            batch = _parse_file(file_path, self.schema)
+            if batch.num_rows:
+                yield batch
+
+
+def _count_tables(counts: dict, tables) -> dict:
+    """``counts`` (rows per table) plus the rows of the Arrow string
+    column ``tables``; a table new to it is added at its first row, so
+    the offset JSON lists tables in the order the log reached them."""
+    import pyarrow.compute as pc
+
+    for vc in pc.value_counts(tables).to_pylist():
+        counts[vc["values"]] = counts.get(vc["values"], 0) + vc["counts"]
+    return counts
 
 
 class CDCReplayStreamReader(SimpleDataSourceStreamReader):
     """Offsets are {"file_idx": i, "row": r, "table_offsets": {t: n}}:
-    the global position in the ordered log directory plus the number
-    of rows consumed per table — the local analog of the reference's
-    CDCOffset {binlog_file, binlog_position, table_offsets}
-    (reference: aurora_cdc_datasource_v2.py:20-41).
+    the global position in the ordered log directory (the file, and
+    the row among its non-blank lines) plus the number of rows
+    consumed per table — the local analog of the reference's CDCOffset
+    {binlog_file, binlog_position, table_offsets} (reference:
+    aurora_cdc_datasource_v2.py:20-41).
 
     Two modes:
 
@@ -484,157 +455,181 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
       in log order; other tables' offsets stand still. Exactly-once
       replay is per-table: [start.table_offsets, end.table_offsets).
 
-    Rows are selected and counted per table on the full parsed tuple;
-    ``read`` and ``readBetweenOffsets`` then yield them as tuples of
-    the reader's schema, in its order.
+    Each log file is parsed once into a RecordBatch of the reader's
+    columns plus ``table`` (which the offsets count) and ``ts`` (which
+    the priority ranks by). ``read`` and ``readBetweenOffsets`` emit
+    slices of those batches (the priority mode a ``take`` of the
+    chosen rows), cut to the reader's schema; never a batch of no
+    rows.
     """
 
     def __init__(self, options: dict, schema: StructType = CDC_EVENT_SCHEMA):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         self.path = options["path"]
-        self.project = _projector(schema)
+        self.names = _check_schema(schema).names
+        self.parse_schema = StructType(
+            schema.fields
+            + [CDC_EVENT_SCHEMA[c] for c in ("table", "ts") if c not in self.names]
+        )
+        self.arrow_schema = to_arrow_schema(self.parse_schema)
         self.batch_size = int(options.get("batch_size", "1000"))
         tpb = options.get("tables_per_batch")
         self.tables_per_batch = int(tpb) if tpb is not None else None
-        # path -> ((size, mtime_ns), lines) of files read before
-        self._file_lines: dict[str, tuple[tuple[int, int], list[str]]] = {}
+        # path -> ((size, mtime_ns), parsed batch) of files read before
+        self._parsed: dict[str, tuple[tuple[int, int], object]] = {}
 
     def initialOffset(self) -> dict:
         return {"file_idx": 0, "row": 0, "table_offsets": {}}
 
-    def _lines(self, path: str) -> list[str]:
-        """``_log_lines(path)``, kept so that a micro-batch does not
-        read and gunzip a file again: the sequential mode keeps the file
-        read last (a batch mostly starts in the file the one before it
-        ended in), the priority mode, which reads the whole log on every
-        trigger, keeps every file. A file whose size or mtime changed,
-        such as a growing plain file, is read again."""
+    def _batch(self, path: str):
+        """``_parse_file(path)`` of the parse schema, kept so that a
+        micro-batch does not read and parse a file again: the
+        sequential mode keeps the file parsed last (a batch mostly
+        starts in the file the one before it ended in), the priority
+        mode, which ranks the whole log on every trigger, keeps every
+        file. A file whose size or mtime changed, such as a growing
+        plain file, is parsed again."""
         st = os.stat(path)
         key = (st.st_size, st.st_mtime_ns)
-        hit = self._file_lines.get(path)
+        hit = self._parsed.get(path)
         if hit is None or hit[0] != key:
             if self.tables_per_batch is None:
-                self._file_lines.clear()
-            hit = self._file_lines[path] = (key, _log_lines(path))
+                self._parsed.clear()
+            hit = self._parsed[path] = (key, _parse_file(path, self.parse_schema))
         return hit[1]
+
+    def _emit(self, batches) -> Iterator:
+        # a list iterator, not a generator: Spark's prefetch cache
+        # copy.copy()s the iterator to serve a batch more than once
+        return iter([b.select(self.names) for b in batches if b.num_rows])
 
     # -- global sequential mode ------------------------------------
 
     def _read_range(
         self, start: dict, limit: int | None, end: dict | None = None
     ) -> tuple[list, dict]:
-        """Parse the log from ``start`` until ``limit`` rows are read
-        or the position reaches ``end`` (no file past it is opened)."""
+        """Slices of the log from ``start`` until ``limit`` rows are
+        read or the position reaches ``end`` (no file past it is
+        opened), and the offset they end at."""
         files = _log_files(self.path)
         stop = (end["file_idx"], end["row"]) if end is not None else (len(files), 0)
-        out: list[tuple] = []
+        out = []
         counts = dict(start.get("table_offsets", {}))
+        budget = math.inf if limit is None else limit
         fi, row = start["file_idx"], start["row"]
         while fi < len(files) and (fi, row) < stop:
-            lines = self._lines(files[fi])
-            while row < len(lines) and (fi, row) < stop:
-                if limit is not None and len(out) >= limit:
-                    return out, {"file_idx": fi, "row": row, "table_offsets": counts}
-                parsed = _parse_line(lines[row])
-                counts[parsed[_TABLE_IDX]] = counts.get(parsed[_TABLE_IDX], 0) + 1
-                out.append(parsed)
-                row += 1
-            if row >= len(lines):
-                fi, row = fi + 1, 0
+            batch = self._batch(files[fi])
+            hi = batch.num_rows if fi < stop[0] else min(stop[1], batch.num_rows)
+            hi = min(hi, row + budget)
+            if hi > row:
+                out.append(batch.slice(row, hi - row))
+                _count_tables(counts, out[-1].column("table"))
+                budget -= hi - row
+                row = hi
+            if row < batch.num_rows:
+                break
+            fi, row = fi + 1, 0
         return out, {"file_idx": fi, "row": row, "table_offsets": counts}
 
     # -- priority (per-table) mode ---------------------------------
 
-    def _rows_by_table(self) -> dict[str, list[tuple]]:
-        by_table: dict[str, list[tuple]] = {}
-        for f in _log_files(self.path):
-            for line in self._lines(f):
-                parsed = _parse_line(line)
-                by_table.setdefault(parsed[_TABLE_IDX], []).append(parsed)
-        return by_table
+    def _log(self):
+        """The whole parsed log as one table, and each table's row
+        positions in it, in log order: a table's offset counts its
+        rows in that order."""
+        import numpy as np
+        import pyarrow as pa
+
+        log = pa.Table.from_batches(
+            [self._batch(f) for f in _log_files(self.path)], schema=self.arrow_schema
+        )
+        enc = log.column("table").combine_chunks().dictionary_encode()
+        codes = enc.indices.to_numpy(zero_copy_only=False)
+        names = enc.dictionary.to_pylist()
+        return log, {t: np.flatnonzero(codes == i) for i, t in enumerate(names)}
+
+    @staticmethod
+    def _between(log, positions: dict, lo: dict, hi: dict, limit: int | None = None):
+        """The first ``limit`` of the rows of each table t from its
+        lo[t]-th to before its hi[t]-th (a table missing from either
+        counts 0), merged in log order."""
+        import numpy as np
+
+        keep = np.zeros(log.num_rows, dtype=bool)
+        for t, pos in positions.items():
+            keep[pos[lo.get(t, 0):hi.get(t, 0)]] = True
+        return log.take(np.flatnonzero(keep)[:limit])
 
     def _read_priority(self, start: dict) -> tuple[list, dict]:
         """TableManager scoring (reference: table_manager.py:157-204):
         capped pending volume + recency of the newest pending change
         relative to the newest pending change anywhere (the streaming
         analog of 'hours since last update')."""
+        import pyarrow as pa
+
         from ..config.table_manager import (
             DAY_HOURS_BONUS,
             RECENT_HOURS_BONUS,
             VOLUME_CAP,
         )
 
-        by_table = self._rows_by_table()
+        log, positions = self._log()
         offsets = dict(start.get("table_offsets", {}))
         pending = {
-            t: rows[offsets.get(t, 0):]
-            for t, rows in by_table.items()
-            if offsets.get(t, 0) < len(rows)
+            t: pos[offsets.get(t, 0):]
+            for t, pos in positions.items()
+            if offsets.get(t, 0) < len(pos)
         }
         if not pending:
             return [], {**start, "table_offsets": offsets}
         # recency anchor: the newest pending event across all tables
-        ts_pos = 3
-        anchor = max(rows[-1][ts_pos] for rows in pending.values())
+        ts_us = log.column("ts").cast(pa.int64()).to_numpy()
+        newest = {t: ts_us[pos[-1]] for t, pos in pending.items()}
+        anchor = max(newest.values())
         scores = {}
-        for t, rows in pending.items():
-            hours = (anchor - rows[-1][ts_pos]).total_seconds() // 3600
+        for t, pos in pending.items():
+            hours = (anchor - newest[t]) // 3_600_000_000
             bonus = (
                 RECENT_HOURS_BONUS
                 if hours < 1
                 else (DAY_HOURS_BONUS if hours < 24 else 0)
             )
-            scores[t] = min(len(rows), VOLUME_CAP) + bonus
+            scores[t] = min(len(pos), VOLUME_CAP) + bonus
         chosen = sorted(pending, key=lambda t: (-scores[t], t))[
             : self.tables_per_batch
         ]
-        # serve chosen tables' rows in global log (seq-of-arrival)
-        # order, up to batch_size total
-        budget = self.batch_size
-        out: list[tuple] = []
-        take: dict[str, int] = {}
-        merged = sorted(
-            ((r, t) for t in chosen for r in pending[t]),
-            key=lambda rt: (rt[0][5],),  # seq position in the log
+        # serve the chosen tables' pending rows merged in log order, up
+        # to batch_size: each table's rows taken are the next in its
+        # own log order, which is what its offset counts
+        rows = self._between(
+            log, positions, offsets, {t: len(positions[t]) for t in chosen}, self.batch_size
         )
-        for r, t in merged:
-            if budget <= 0:
-                break
-            out.append(r)
-            take[t] = take.get(t, 0) + 1
-            budget -= 1
-        for t, n in take.items():
-            offsets[t] = offsets.get(t, 0) + n
-        return out, {
+        return rows.to_batches(), {
             "file_idx": start.get("file_idx", 0),
             "row": start.get("row", 0),
-            "table_offsets": offsets,
+            "table_offsets": _count_tables(offsets, rows.column("table")),
         }
 
     # -- SimpleDataSourceStreamReader contract ---------------------
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+    def read(self, start: dict) -> tuple[Iterator, dict]:
         if self.tables_per_batch is not None:
-            rows, end = self._read_priority(start)
+            batches, end = self._read_priority(start)
         else:
-            rows, end = self._read_range(start, self.batch_size)
-        # a list iterator, not a generator: Spark's prefetch cache
-        # copy.copy()s the iterator to serve a batch more than once
-        return iter(list(map(self.project, rows))), end
+            batches, end = self._read_range(start, self.batch_size)
+        return self._emit(batches), end
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         # exactly-once replay on recovery: re-read [start, end)
         if self.tables_per_batch is not None:
-            s_off = start.get("table_offsets", {})
-            e_off = end.get("table_offsets", {})
-            by_table = self._rows_by_table()
-            out = []
-            for t, rows in by_table.items():
-                lo, hi = s_off.get(t, 0), e_off.get(t, 0)
-                out.extend(rows[lo:hi])
-            out.sort(key=lambda r: r[5])  # global seq order, as read()
+            log, positions = self._log()
+            batches = self._between(
+                log, positions, start.get("table_offsets", {}), end.get("table_offsets", {})
+            ).to_batches()
         else:
-            out, _ = self._read_range(start, None, end)
-        return iter(list(map(self.project, out)))
+            batches, _ = self._read_range(start, None, end)
+        return self._emit(batches)
 
     def commit(self, end: dict) -> None:
         # Checkpoint the committed offset (reference: lines 479-489).
@@ -666,25 +661,14 @@ class CDCReplayDataSource(DataSource):
 # JVM-native binlog reader (the at-rest scan path)
 # ---------------------------------------------------------------------------
 
-# Raw JSON-lines schema of the staged binlog (microsecond epoch ints
-# for the time fields; maps for the row images).
-_BINLOG_JSON_SCHEMA = (
-    "database string, `table` string, operation string, ts_us long, "
-    "event_time_us long, seq long, binlog_file string, "
-    "binlog_position long, gtid string, server_id long, "
-    "transaction_id string, before map<string,string>, "
-    "after map<string,string>, primary_keys map<string,string>, "
-    "schema_version string, ddl_statement string, "
-    "processing_time_us long, batch_id string, partition_id long, "
-    "is_snapshot boolean, error_flag boolean, error_message string"
-)
-
 
 def read_binlog_native(spark, path: str):
     """Read the staged binlog with Spark's built-in JSON scan instead
     of the Python DataSource: same 21-column CDC_EVENT_SCHEMA output,
     but the JSON parsing runs JVM-side (vectorized reader, no Python
-    workers in the scan).
+    workers in the scan). It reads the raw record format of
+    ``_binlog_arrow_schema(maps=True)`` and derives every column on
+    its own, so it is an independent check of ``_parse_file``.
 
     Division of labor at scale: CDCReplayDataSource is the PROTOCOL
     path — offsets, commit, per-table priority batches, streaming
@@ -700,9 +684,10 @@ def read_binlog_native(spark, path: str):
     in the path itself made Spark look for a ``_spark_metadata`` log
     under the glob and warn with a stack trace on every read."""
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     raw = (
-        spark.read.schema(_BINLOG_JSON_SCHEMA)
+        spark.read.schema(from_arrow_schema(_binlog_arrow_schema(maps=True)))
         .option("pathGlobFilter", "*.{jsonl,jsonl.gz}")
         .json(path)
     )

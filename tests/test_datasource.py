@@ -12,6 +12,7 @@ import re
 import shutil
 
 import pyarrow as pa
+import pyarrow.json as pj
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -41,6 +42,36 @@ def binlog_dir(tmp_path_factory, sf_dir):
     n = write_binlog_from_events(f"{sf_dir}/events.parquet", str(out), rows_per_file=300)
     assert n > 0
     return str(out), n
+
+
+@pytest.fixture(scope="module")
+def ddl_binlog_dir(tmp_path_factory, sf_dir):
+    """The log with the mid-log DDL event, whose seq (1e9 + its index)
+    does not follow the log order; n counts the DDL event too."""
+    out = tmp_path_factory.mktemp("binlog_ddl")
+    n = write_binlog_from_events(
+        f"{sf_dir}/events.parquet", str(out), rows_per_file=300, include_ddl=True
+    )
+    return str(out), n + 1
+
+
+def _rows(batches) -> list[tuple]:
+    """The rows of a reader's output as tuples, each value as a Spark
+    row gives it (a map as a dict, a timestamp as a naive local
+    datetime). Every item must be a RecordBatch of at least one row."""
+    out = []
+    for b in batches:
+        assert isinstance(b, pa.RecordBatch) and b.num_rows
+        cols = []
+        for col in b.columns:
+            vals = col.to_pylist()
+            if pa.types.is_map(col.type):
+                vals = [None if v is None else dict(v) for v in vals]
+            elif pa.types.is_timestamp(col.type):
+                vals = [None if v is None else v.astimezone().replace(tzinfo=None) for v in vals]
+            cols.append(vals)
+        out.extend(zip(*cols))
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -134,7 +165,7 @@ def test_stream_offsets_progress(binlog_dir):
     batches = 0
     while True:
         rows, end = reader.read(offset)
-        rows = list(rows)
+        rows = _rows(rows)
         if not rows:
             break
         total += len(rows)
@@ -148,32 +179,36 @@ def test_stream_offsets_progress(binlog_dir):
 def test_stream_replay_between_offsets(binlog_dir, monkeypatch):
     """Exactly-once recovery: re-reading [start, end) returns the
     identical batch for every batch of a full drain (500-row batches
-    over 300-row files, so most start mid-file), and parses only the
-    batch's own rows."""
+    over 300-row files, so most start mid-file), and a new reader's
+    replay parses only the files the batch spans."""
     path, n = binlog_dir
     reader = CDCReplayStreamReader({"path": path, "batch_size": "500"})
     batches = []
     start = reader.initialOffset()
     while True:
         rows, end = reader.read(start)
-        rows = list(rows)
+        rows = _rows(rows)
         if not rows:
             break
         batches.append((start, end, rows))
         start = end
     assert sum(len(rows) for _, _, rows in batches) == n
     assert any(s["row"] for s, _, _ in batches)
-    parse, parsed = cdc_datasource._parse_line, []
+    parse, parsed = cdc_datasource._parse_file, []
 
-    def counting_parse(line):
-        parsed.append(line)
-        return parse(line)
+    def counting_parse(path, schema):
+        parsed.append(path)
+        return parse(path, schema)
 
-    monkeypatch.setattr(cdc_datasource, "_parse_line", counting_parse)
+    monkeypatch.setattr(cdc_datasource, "_parse_file", counting_parse)
+    files = _log_files(path)
     for start, end, rows in batches:
+        assert _rows(reader.readBetweenOffsets(start, end)) == rows
         parsed.clear()
-        assert list(reader.readBetweenOffsets(start, end)) == rows
-        assert len(parsed) == len(rows)
+        recovered = CDCReplayStreamReader({"path": path, "batch_size": "500"})
+        assert _rows(recovered.readBetweenOffsets(start, end)) == rows
+        spanned = files[start["file_idx"] : end["file_idx"] + (1 if end["row"] else 0)]
+        assert parsed == spanned
 
 
 def test_read_binlog_in_a_second_session(spark, sf_dir):
@@ -311,7 +346,7 @@ def test_priority_mode_serves_top_tables_first(binlog_dir):
         {"path": path, "batch_size": "200", "tables_per_batch": "2"}
     )
     rows, end = reader.read(reader.initialOffset())
-    rows = list(rows)
+    rows = _rows(rows)
     tables = {r[1] for r in rows}
     assert len(tables) <= 2
     assert len(rows) <= 200
@@ -319,31 +354,33 @@ def test_priority_mode_serves_top_tables_first(binlog_dir):
     assert consumed == tables
 
 
-def test_priority_mode_exactly_once_per_table(binlog_dir):
+def test_priority_mode_exactly_once_per_table(binlog_dir, ddl_binlog_dir):
     """Draining the log in priority mode delivers every row of every
     table exactly once, and replaying any [start, end) offset pair
-    reproduces the identical batch."""
-    path, n = binlog_dir
-    reader = CDCReplayStreamReader(
-        {"path": path, "batch_size": "300", "tables_per_batch": "2"}
-    )
-    offset = reader.initialOffset()
-    seen: list[int] = []
-    replay_checked = False
-    while True:
-        rows, end = reader.read(offset)
-        rows = list(rows)
-        if not rows:
-            break
-        if not replay_checked and len(seen) > 0:
-            replayed = list(reader.readBetweenOffsets(offset, end))
-            assert replayed == rows
-            replay_checked = True
-        seen.extend(r[5] for r in rows)  # seq
-        offset = end
-    assert replay_checked
-    assert len(seen) == n
-    assert len(set(seen)) == n  # no duplicates, nothing missed
+    reproduces the identical batch. On the DDL log too, whose DDL
+    event's seq is out of log order: a table's rows are served in log
+    order, which is what its offset counts."""
+    for path, n in (binlog_dir, ddl_binlog_dir):
+        reader = CDCReplayStreamReader(
+            {"path": path, "batch_size": "300", "tables_per_batch": "2"}
+        )
+        offset = reader.initialOffset()
+        seen: list[int] = []
+        replay_checked = False
+        while True:
+            rows, end = reader.read(offset)
+            rows = _rows(rows)
+            if not rows:
+                break
+            if not replay_checked and len(seen) > 0:
+                replayed = _rows(reader.readBetweenOffsets(offset, end))
+                assert replayed == rows
+                replay_checked = True
+            seen.extend(r[5] for r in rows)  # seq
+            offset = end
+        assert replay_checked
+        assert len(seen) == n
+        assert len(set(seen)) == n  # no duplicates, nothing missed
 
 
 def test_debezium_dlq_partitions_the_stream(spark, sf_dir):
@@ -469,19 +506,21 @@ def test_batch_reader_emits_exactly_the_read_schema(binlog_dir, names):
 @pytest.mark.parametrize(
     "names", [SUBSET, REORDERED, ("seq",)], ids=["subset", "reordered", "one_column"]
 )
-def test_tuple_fallback_emits_the_read_schema(tmp_path, binlog_dir, names):
-    """A file outside the canonical format (an extra field) falls back
-    to per-line tuples, each of the schema's arity and order."""
+def test_tuple_fallback_emits_the_read_schema(spark, tmp_path, binlog_dir, names):
+    """A file outside the canonical format (an extra field) takes the
+    fallback decode, which emits RecordBatches of the read schema
+    whose rows are the JVM JSON scan's."""
     path, _ = binlog_dir
     lines = [json.loads(ln) for ln in _log_lines(_log_files(path)[0])][:5]
     (tmp_path / "binlog.000000.jsonl").write_text(
         "".join(json.dumps({**rec, "extra": 1}) + "\n" for rec in lines)
     )
-    reader = CDCReplayBatchReader({"path": str(tmp_path)}, _schema(*names))
-    rows = list(reader.read(_FilePartition(_log_files(str(tmp_path)))))
-    full = [cdc_datasource._parse_line(json.dumps(rec)) for rec in lines]
-    idx = [CDC_EVENT_SCHEMA.names.index(c) for c in names]
-    assert rows == [tuple(r[i] for i in idx) for r in full]
+    schema = _schema(*names)
+    reader = CDCReplayBatchReader({"path": str(tmp_path)}, schema)
+    batches = list(reader.read(_FilePartition(_log_files(str(tmp_path)))))
+    assert all(b.schema == to_arrow_schema(schema) for b in batches)
+    want = read_binlog_native(spark, str(tmp_path)).select(*names).collect()
+    assert _rows(batches) == [tuple(r) for r in want]
 
 
 def test_read_binlog_columns_equal_the_full_reads_select(spark, sf_dir):
@@ -563,11 +602,11 @@ def test_stream_drain_of_a_subset_equals_its_batch_read(registered, binlog_dir):
     while True:
         it, end = reader.read(offset)
         # Spark's prefetch cache serves a batch from copies of it
-        rows = list(copy.copy(it))
-        assert list(it) == rows
+        rows = _rows(copy.copy(it))
+        assert _rows(it) == rows
         if not rows:
             break
-        assert list(reader.readBetweenOffsets(offset, end)) == rows
+        assert _rows(reader.readBetweenOffsets(offset, end)) == rows
         drained.extend(rows)
         offset = end
     assert sum(offset["table_offsets"].values()) == n
@@ -618,12 +657,11 @@ def test_spark_stream_of_a_subset_equals_its_batch_read(registered, binlog_dir, 
 NOT_LOG_FILES = ("_BINLOG_DONE", "_committed_offset.json", "_committed_offset.json.tmp")
 
 
-@pytest.fixture(scope="module")
-def encodings(tmp_path_factory, binlog_dir):
+def _encodings(tmp_path_factory, log_dir):
     """The same log twice, as the writer's gzip files and as plain
     JSON lines, each next to the files a log dir also holds (the
     cache marker and the stream's committed-offset marker)."""
-    src, n = binlog_dir
+    src, n = log_dir
     gz = tmp_path_factory.mktemp("log_gz")
     plain = tmp_path_factory.mktemp("log_plain")
     for f in _log_files(src):
@@ -638,6 +676,16 @@ def encodings(tmp_path_factory, binlog_dir):
     return str(plain), str(gz), n
 
 
+@pytest.fixture(scope="module")
+def encodings(tmp_path_factory, binlog_dir):
+    return _encodings(tmp_path_factory, binlog_dir)
+
+
+@pytest.fixture(scope="module")
+def ddl_encodings(tmp_path_factory, ddl_binlog_dir):
+    return _encodings(tmp_path_factory, ddl_binlog_dir)
+
+
 def _drain(path: str, **options) -> list:
     """(start, end, rows, replayed rows) of every micro-batch of a
     full stream drain."""
@@ -645,10 +693,10 @@ def _drain(path: str, **options) -> list:
     start, out = reader.initialOffset(), []
     while True:
         it, end = reader.read(start)
-        rows = list(it)
+        rows = _rows(it)
         if not rows:
             return out
-        out.append((start, end, rows, list(reader.readBetweenOffsets(start, end))))
+        out.append((start, end, rows, _rows(reader.readBetweenOffsets(start, end))))
         start = end
 
 
@@ -665,25 +713,39 @@ def test_both_encodings_give_the_same_arrow_batches(encodings):
 
 
 def test_both_encodings_give_the_same_tuple_fallback_rows(encodings, monkeypatch):
+    """The fallback decode (forced here by failing the canonical one)
+    reads both encodings alike, into the canonical decode's batches."""
     plain, gz, n = encodings
-    monkeypatch.setattr(cdc_datasource, "_parse_file_arrow", lambda path, schema: None)
-    rows = [
-        list(CDCReplayBatchReader({"path": p}).read(_FilePartition(_log_files(p))))
-        for p in (plain, gz)
-    ]
-    assert len(rows[0]) == n
-    assert rows[0] == rows[1]
+
+    def read(path):
+        batches = CDCReplayBatchReader({"path": path}).read(_FilePartition(_log_files(path)))
+        return pa.Table.from_batches(list(batches))
+
+    canonical = read(plain)
+
+    def not_canonical(*args, **kwargs):
+        raise pa.ArrowInvalid("not the canonical format")
+
+    monkeypatch.setattr(pj, "read_json", not_canonical)
+    tables = [read(p) for p in (plain, gz)]
+    assert tables[0].num_rows == n
+    assert tables[0].equals(tables[1])
+    assert tables[0].equals(canonical)
 
 
 @pytest.mark.parametrize("options", [{}, {"tables_per_batch": "2"}], ids=["sequential", "priority"])
-def test_both_encodings_give_the_same_stream(encodings, options):
+def test_both_encodings_give_the_same_stream(encodings, ddl_encodings, options):
     """read and readBetweenOffsets yield the same rows at the same
-    offsets from either encoding, and a replay is the batch read."""
-    plain, gz, n = encodings
-    drains = [_drain(p, **options) for p in (plain, gz)]
-    assert sum(len(rows) for _, _, rows, _ in drains[0]) == n
-    assert drains[0] == drains[1]
-    assert all(rows == replayed for _, _, rows, replayed in drains[1])
+    offsets from either encoding, and a replay is the batch read; of
+    the plain log and of the DDL log, every event once. The DDL log is
+    drained in 300-row batches, which end inside the DDL table's rows
+    around its out-of-order DDL event."""
+    for (plain, gz, n), batch_size in ((encodings, "700"), (ddl_encodings, "300")):
+        drains = [_drain(p, **{"batch_size": batch_size, **options}) for p in (plain, gz)]
+        seqs = [r[5] for _, _, rows, _ in drains[0] for r in rows]
+        assert len(seqs) == len(set(seqs)) == n
+        assert drains[0] == drains[1]
+        assert all(rows == replayed for _, _, rows, replayed in drains[1])
 
 
 def test_both_encodings_read_the_same_on_both_engines(registered, encodings):
@@ -731,7 +793,10 @@ def test_partitions_pack_by_parse_bytes_not_gzip_bytes(encodings, monkeypatch):
 def test_binlog_cache_is_gzip_and_skips_a_plain_v2_cache(sf_dir, tmp_path, monkeypatch, include_ddl):
     """binlog_path writes only gzip log files, at under a fifth of the
     text they hold, and does not return a plain cache of the previous
-    version even when that one is complete."""
+    version even when that one is complete. Writing a cache deletes
+    the cdc_binlog[_ddl]_v<N>_* dirs with N below the current version;
+    another sf_dir's current cache, a later version and other dirs
+    stay."""
     monkeypatch.setattr(p01_cdc_operation_log, "BINLOG_CACHE_ROOT", str(tmp_path))
 
     def logs_of(path):
@@ -753,12 +818,16 @@ def test_binlog_cache_is_gzip_and_skips_a_plain_v2_cache(sf_dir, tmp_path, monke
     stale.mkdir()
     (stale / "binlog.000000.jsonl").write_text("{}\n")
     (stale / "_BINLOG_DONE").touch()
+    kept = ["cdc_binlog_v3_other", "cdc_binlog_ddl_v10_later", "notes_v1_x"]
+    for name in ["cdc_binlog_ddl_v1_older"] + kept:
+        (tmp_path / name).mkdir()
     again = binlog_path(sf_dir, include_ddl=include_ddl)
     assert again == path != str(stale)
     assert len(logs_of(again)) == len(_log_files(again))
+    assert sorted(os.listdir(tmp_path)) == sorted(kept + [os.path.basename(path)])
 
 
-def test_stream_reads_rows_appended_to_a_plain_file(binlog_dir, tmp_path):
+def test_stream_reads_rows_appended_to_a_plain_file(spark, binlog_dir, tmp_path):
     """A live plain log grows between micro-batches: the rows appended
     to the file a batch stopped in are read by the next batch."""
     path, _ = binlog_dir
@@ -769,11 +838,31 @@ def test_stream_reads_rows_appended_to_a_plain_file(binlog_dir, tmp_path):
     first, offset = reader.read(reader.initialOffset())
     with open(log, "a") as fh:
         fh.write("\n".join(lines[5:]) + "\n")
-    rows = list(first)
+    rows = _rows(first)
     while True:
         it, offset = reader.read(offset)
-        batch = list(it)
+        batch = _rows(it)
         if not batch:
             break
         rows.extend(batch)
-    assert rows == [cdc_datasource._parse_line(ln) for ln in lines]
+    want = read_binlog_native(spark, str(tmp_path)).orderBy("seq").collect()
+    assert rows == [tuple(r) for r in want]
+
+
+@pytest.mark.parametrize("extra", [{}, {"extra": 1}], ids=["canonical", "fallback"])
+def test_a_record_without_a_required_field_is_a_named_error(binlog_dir, tmp_path, extra):
+    """A record without `seq` is a ValueError naming the file and the
+    field, from either decode, in the batch and the stream reader (the
+    fallback decode would otherwise give a NULL in a non-null column)."""
+    path, _ = binlog_dir
+    lines = [json.loads(ln) for ln in _log_lines(_log_files(path)[0])][:5]
+    del lines[2]["seq"]
+    log = tmp_path / "binlog.000000.jsonl"
+    log.write_text("".join(json.dumps({**rec, **extra}) + "\n" for rec in lines))
+    match = rf"cdc_replay: record 2 of {re.escape(str(log))} has no 'seq'"
+    with pytest.raises(ValueError, match=match):
+        list(CDCReplayBatchReader({"path": str(tmp_path)}).read(_FilePartition([str(log)])))
+    reader = CDCReplayStreamReader({"path": str(tmp_path)}, _schema("operation"))
+    with pytest.raises(ValueError, match=match):
+        reader.read(reader.initialOffset())
+

@@ -806,7 +806,9 @@ def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
     the DataSource-backed queries; cached under .cache/ keyed by a
     generator version so format changes invalidate stale logs. The
     ``include_ddl`` variant (a separate cache dir) carries the
-    mid-log DDL event + schema_version 2 payloads."""
+    mid-log DDL event + schema_version 2 payloads. Every call drops
+    the caches of earlier generator versions, not only one that
+    writes a cache."""
     import hashlib
 
     from ..sources.cdc_datasource import write_binlog_from_events
@@ -821,8 +823,8 @@ def binlog_path(sf_dir: str, include_ddl: bool = False) -> str:
     variant = "cdc_binlog_ddl" if include_ddl else "cdc_binlog"
     out = os.path.join(BINLOG_CACHE_ROOT, f"{variant}_v{BINLOG_VERSION}_{tag}")
     marker = os.path.join(out, "_BINLOG_DONE")
+    _drop_stale_binlogs()
     if not os.path.exists(marker):
-        _drop_stale_binlogs()
         write_binlog_from_events(
             f"{sf_dir}/events.parquet", out, include_ddl=include_ddl
         )

@@ -17,7 +17,11 @@ At rest the log is gzip JSON lines (``binlog.NNNNNN.jsonl.gz``, as
 production binlogs are stored compressed): the staged log compresses
 about 11x, so both replay scans read a tenth of the bytes. Plain
 ``.jsonl`` files, hand-written or live-tailed, are read too; every read
-path picks the codec by the file's suffix.
+path picks the codec by the file's suffix. The two readers split on a
+plain file's bytes after its last newline: the batch read parses them
+as a last line (a hand-written file need not end in a newline), the
+stream reader takes them as not yet written (a live log's writer may
+be mid-line) and reads that line once its newline is there.
 
 Every reader turns a log file into events one way, ``_parse_file``,
 and emits pyarrow.RecordBatches, which Spark passes to the JVM as they
@@ -124,14 +128,21 @@ def _log_files(path: str) -> list[str]:
     )
 
 
-def _log_lines(path: str) -> list[str]:
-    """The non-blank lines of one log file, read whole and gunzipped
-    when its name ends in ``.gz``."""
+def _log_text(path: str, whole_lines: bool = False) -> bytes:
+    """One log file's bytes, read whole and gunzipped when its name
+    ends in ``.gz``. With ``whole_lines`` a plain file ends at its last
+    newline: a live log's writer may not have finished the line after
+    it."""
     with open(path, "rb") as fh:
         data = fh.read()
     if path.endswith(".gz"):
-        data = gzip.decompress(data)
-    return [ln for ln in data.decode().split("\n") if ln.strip()]
+        return gzip.decompress(data)
+    return data[: data.rfind(b"\n") + 1] if whole_lines else data
+
+
+def _log_lines(path: str, whole_lines: bool = False) -> list[str]:
+    """The non-blank lines of one log file (``_log_text``)."""
+    return [ln for ln in _log_text(path, whole_lines).decode().split("\n") if ln.strip()]
 
 
 def _parse_bytes(path: str) -> int:
@@ -278,9 +289,11 @@ def _struct_to_map(arr):
     )
 
 
-def _parse_file(path: str, schema: StructType):
+def _parse_file(path: str, schema: StructType, whole_lines: bool = False):
     """Parse one log file into a RecordBatch of ``schema``'s fields (a
-    subset of CDC_EVENT_SCHEMA, any order) in their Arrow form. A file
+    subset of CDC_EVENT_SCHEMA, any order) in their Arrow form. With
+    ``whole_lines`` a plain file's bytes after its last newline are
+    left out (``_log_text``), as not yet written. A file
     in the canonical format parses whole in pyarrow's C++ JSON reader;
     any other (an unknown field, another type) is json.loads'ed line
     by line into the raw schema with map payloads. Both skip blank
@@ -294,9 +307,12 @@ def _parse_file(path: str, schema: StructType):
     import pyarrow.json as pj
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    source = path
+    if whole_lines and not path.endswith(".gz"):
+        source = pa.BufferReader(_log_text(path, whole_lines))
     try:
         tab = pj.read_json(
-            path,
+            source,
             parse_options=pj.ParseOptions(
                 explicit_schema=_binlog_arrow_schema(),
                 unexpected_field_behavior="error",
@@ -305,7 +321,7 @@ def _parse_file(path: str, schema: StructType):
         )
     except pa.ArrowInvalid:
         tab = pa.Table.from_pylist(
-            [json.loads(ln) for ln in _log_lines(path)],
+            [json.loads(ln) for ln in _log_lines(path, whole_lines)],
             schema=_binlog_arrow_schema(maps=True),
         )
     for name in _REQUIRED_FIELDS:
@@ -489,14 +505,17 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
         starts in the file the one before it ended in), the priority
         mode, which ranks the whole log on every trigger, keeps every
         file. A file whose size or mtime changed, such as a growing
-        plain file, is parsed again."""
+        plain file, is parsed again. A plain file is parsed up to its
+        last newline: a half-written last line is read once it is
+        whole."""
         st = os.stat(path)
         key = (st.st_size, st.st_mtime_ns)
         hit = self._parsed.get(path)
         if hit is None or hit[0] != key:
             if self.tables_per_batch is None:
                 self._parsed.clear()
-            hit = self._parsed[path] = (key, _parse_file(path, self.parse_schema))
+            batch = _parse_file(path, self.parse_schema, whole_lines=True)
+            hit = self._parsed[path] = (key, batch)
         return hit[1]
 
     def _emit(self, batches) -> Iterator:
@@ -511,7 +530,8 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
     ) -> tuple[list, dict]:
         """Slices of the log from ``start`` until ``limit`` rows are
         read or the position reaches ``end`` (no file past it is
-        opened), and the offset they end at."""
+        opened), and the offset they end at. The offset stays in the
+        last file at its end, as a live log's last file may grow."""
         files = _log_files(self.path)
         stop = (end["file_idx"], end["row"]) if end is not None else (len(files), 0)
         out = []
@@ -527,7 +547,7 @@ class CDCReplayStreamReader(SimpleDataSourceStreamReader):
                 _count_tables(counts, out[-1].column("table"))
                 budget -= hi - row
                 row = hi
-            if row < batch.num_rows:
+            if row < batch.num_rows or fi + 1 == len(files):
                 break
             fi, row = fi + 1, 0
         return out, {"file_idx": fi, "row": row, "table_offsets": counts}

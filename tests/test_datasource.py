@@ -196,9 +196,9 @@ def test_stream_replay_between_offsets(binlog_dir, monkeypatch):
     assert any(s["row"] for s, _, _ in batches)
     parse, parsed = cdc_datasource._parse_file, []
 
-    def counting_parse(path, schema):
+    def counting_parse(path, *args, **kwargs):
         parsed.append(path)
-        return parse(path, schema)
+        return parse(path, *args, **kwargs)
 
     monkeypatch.setattr(cdc_datasource, "_parse_file", counting_parse)
     files = _log_files(path)
@@ -793,8 +793,9 @@ def test_partitions_pack_by_parse_bytes_not_gzip_bytes(encodings, monkeypatch):
 def test_binlog_cache_is_gzip_and_skips_a_plain_v2_cache(sf_dir, tmp_path, monkeypatch, include_ddl):
     """binlog_path writes only gzip log files, at under a fifth of the
     text they hold, and does not return a plain cache of the previous
-    version even when that one is complete. Writing a cache deletes
-    the cdc_binlog[_ddl]_v<N>_* dirs with N below the current version;
+    version even when that one is complete. Every call, also one
+    that finds its cache and writes nothing, deletes the
+    cdc_binlog[_ddl]_v<N>_* dirs with N below the current version;
     another sf_dir's current cache, a later version and other dirs
     stay."""
     monkeypatch.setattr(p01_cdc_operation_log, "BINLOG_CACHE_ROOT", str(tmp_path))
@@ -825,6 +826,11 @@ def test_binlog_cache_is_gzip_and_skips_a_plain_v2_cache(sf_dir, tmp_path, monke
     assert again == path != str(stale)
     assert len(logs_of(again)) == len(_log_files(again))
     assert sorted(os.listdir(tmp_path)) == sorted(kept + [os.path.basename(path)])
+    # the current cache exists now, so nothing is written; an earlier
+    # version's dir still goes
+    stale.mkdir()
+    assert binlog_path(sf_dir, include_ddl=include_ddl) == path
+    assert sorted(os.listdir(tmp_path)) == sorted(kept + [os.path.basename(path)])
 
 
 def test_stream_reads_rows_appended_to_a_plain_file(spark, binlog_dir, tmp_path):
@@ -847,6 +853,37 @@ def test_stream_reads_rows_appended_to_a_plain_file(spark, binlog_dir, tmp_path)
         rows.extend(batch)
     want = read_binlog_native(spark, str(tmp_path)).orderBy("seq").collect()
     assert rows == [tuple(r) for r in want]
+
+
+def test_stream_waits_for_a_half_written_last_line(spark, binlog_dir, tmp_path):
+    """A live plain log whose writer is mid-line: the stream serves the
+    5 whole lines, then the sixth exactly once when its newline is
+    there, and a replay of each batch equals its read. The batch read
+    still parses a file without a final newline whole."""
+    path, _ = binlog_dir
+    lines = _log_lines(_log_files(path)[0])[:6]
+    log = tmp_path / "binlog.000000.jsonl"
+    log.write_text("".join(ln + "\n" for ln in lines[:5]) + lines[5][:40])
+    reader = CDCReplayStreamReader({"path": str(tmp_path)})
+    start = reader.initialOffset()
+    first, mid = reader.read(start)
+    first = _rows(first)
+    assert len(first) == 5
+    again, same = reader.read(mid)
+    assert (_rows(again), same) == ([], mid)
+    with open(log, "a") as fh:
+        fh.write(lines[5][40:] + "\n")
+    sixth, end = reader.read(mid)
+    sixth = _rows(sixth)
+    assert _rows(reader.read(end)[0]) == []
+    want = [tuple(r) for r in read_binlog_native(spark, str(tmp_path)).collect()]
+    assert first + sixth == want and len(want) == 6
+    recovered = CDCReplayStreamReader({"path": str(tmp_path)})
+    assert _rows(recovered.readBetweenOffsets(start, mid)) == first
+    assert _rows(recovered.readBetweenOffsets(mid, end)) == sixth
+    log.write_text("".join(ln + "\n" for ln in lines[:5]) + lines[5])
+    batch = CDCReplayBatchReader({"path": str(tmp_path)})
+    assert _rows(batch.read(_FilePartition([str(log)]))) == want
 
 
 @pytest.mark.parametrize("extra", [{}, {"extra": 1}], ids=["canonical", "fallback"])

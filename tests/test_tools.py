@@ -1,5 +1,5 @@
 """tools/: the scripts on disk are the ones README's Layout block
-names, each compiles, and tools/scale.py records seconds, exponents
+names, each compiles, and tools/scale.py records seconds, bytes, exponents
 and errors, with each query warmed up untimed first."""
 
 from __future__ import annotations
@@ -41,6 +41,14 @@ def test_scale_records_seconds_exponents_and_errors(spark, sf_dir, tmp_path):
         assert all(t > 0 for t in point["results"].values())
     assert (missing["n_ok"], missing["n_error"]) == (0, 2)
     assert all(v.startswith("ERROR: ") for v in missing["results"].values())
+    # every query's bytes, failed ones too; the latest state shuffles,
+    # so the session wrote bytes while it ran
+    for point in record["points"]:
+        assert sorted(point["read_bytes"]) == sorted(point["written_bytes"]) == sorted(names)
+        counts = [*point["read_bytes"].values(), *point["written_bytes"].values()]
+        assert all(b >= 0 for b in counts)
+    for point in (first, second):
+        assert point["written_bytes"]["cdc_latest_state"] > 0
     timed, failed = record["pairs"]
     assert (timed["from"], timed["to"]) == (first["sf_dir"], second["sf_dir"])
     assert all(isinstance(x, float) for x in timed["exponents"].values())

@@ -6,7 +6,10 @@ one session and record how their wall time grows.
 Each query (default: every registered query, sorted) runs at each sf
 dir, point by point, end to end through the ``noop`` sink, as bench.py
 does. OUT.json gets, per point, the wall seconds of each query or the
-first line of its error (``"ERROR: ..."``), and, per pair of
+first line of its error (``"ERROR: ..."``), the bytes the session's
+JVM and Python workers read and wrote while it ran (``read_bytes``,
+``written_bytes``: rchar and wchar of /proc/<pid>/io, taken with
+perfbench/harness.tree_usage), and, per pair of
 consecutive points, each query's log-log exponent
 ``log10(t_b / t_a) / log10(sf_b / sf_a)``, the sf being parsed from
 the dir name (``.../sf0.1`` is 0.1). A query that failed at either
@@ -31,6 +34,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from aurora_cdc_demo_spark.registry import QUERIES  # noqa: E402
 from aurora_cdc_demo_spark.session import get_spark  # noqa: E402
+from perfbench.harness import tree_usage  # noqa: E402
 
 
 def parse_sf(sf_dir: str) -> float | None:
@@ -55,7 +59,10 @@ def warm_up(spark, sf_dir: str, names: list[str]) -> None:
 
 def run_point(spark, sf_dir: str, names: list[str]) -> dict:
     results: dict[str, float | str] = {}
+    read: dict[str, int] = {}
+    written: dict[str, int] = {}
     for name in names:
+        _, r0, w0 = tree_usage()
         t0 = time.perf_counter()
         try:
             run_query(spark, sf_dir, name)
@@ -65,6 +72,8 @@ def run_point(spark, sf_dir: str, names: list[str]) -> dict:
             msg = str(e).strip().split("\n")[0][:200]
             results[name] = f"ERROR: {msg}"
             print(f"FAIL {sf_dir} {name}: {msg}", flush=True)
+        _, r1, w1 = tree_usage()
+        read[name], written[name] = r1 - r0, w1 - w0
     n_error = sum(isinstance(v, str) for v in results.values())
     return {
         "sf_dir": sf_dir,
@@ -72,6 +81,8 @@ def run_point(spark, sf_dir: str, names: list[str]) -> dict:
         "n_ok": len(results) - n_error,
         "n_error": n_error,
         "results": results,
+        "read_bytes": read,
+        "written_bytes": written,
     }
 
 
